@@ -276,10 +276,10 @@ object Dedup {
     // r15 (guide §3.1, measured): the shingle-ARRAY side of the
     // verify join is corpus-sized — AQE broadcast it at bench SF
     // (two ~50 MB serial hashed-relation builds, the dominant verify
-    // cost: 3.72 → 2.16 s under the shuffle-hash hint in the ProbeR15
-    // contjoin A/B) and at 100 TB it can never broadcast. Force the
-    // scale-honest strategy: hash-shuffle both sides by doc id, build
-    // on the array side per partition, no sort.
+    // cost: 3.72 → 2.16 s under the shuffle-hash hint in the r15
+    // contjoin A/B, VERDICT.md) and at 100 TB it can never broadcast.
+    // Force the scale-honest strategy: hash-shuffle both sides by doc
+    // id, build on the array side per partition, no sort.
     val sets = docs.select(col("doc_id"),
       Text.shingles3(col("text")).as("shingles"))
       .hint("shuffle_hash")
@@ -384,7 +384,7 @@ object Dedup {
     val docs = Tables.documents(spark, dir)
     val cands = containmentCandidates(docs)
     // r15: shuffle-hash verify — same measurement and 100 TB argument
-    // as qDedupNgramJaccard above (ProbeR15 contjoin: 3.72 → 2.16 s)
+    // as qDedupNgramJaccard above (contjoin A/B: 3.72 → 2.16 s)
     val sets = docs.select(col("doc_id"),
         Text.shingles3(col("text")).as("shingles"))
       .where(size(col("shingles")) > 0)

@@ -115,13 +115,11 @@ object AdStream {
   def sinkPerBatch(stats: DataFrame, queryName: String,
                    upsertBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    StateStores.withProvider(stats.sparkSession) {
-      stats.writeStream
-        .outputMode("update")
-        .queryName(queryName)
-        .foreachBatch(upsertBatch)
-        .start()
-    }
+    stats.writeStream
+      .outputMode("update")
+      .queryName(queryName)
+      .foreachBatch(upsertBatch)
+      .start()
 
   /** The Kafka source configuration, exposed as plain data: no
     * broker or spark-sql-kafka connector jar ships in this offline

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import scala.collection.mutable.ListBuffer
@@ -71,7 +70,6 @@ object StatefulSequences {
   private[graft] def streamSequenceExamples(spark: SparkSession, dir: String,
                                             nChunks: Int): DataFrame = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val feed = graft.Tables.eventsNorm(spark, dir)
       .select(col("user_id"), col("event_id"), col("ts_ord"),
         col("ts_sec"), col("event_type"))
@@ -83,26 +81,12 @@ object StatefulSequences {
       .as[(Long, Long, Long, Long, String)].collect()
       .sortBy(t => (t._3, t._2))
       .map(t => Ev(t._1, t._2, t._3, t._4, t._5)).toSeq
-    val out = ListBuffer[Example]()
-    implicit val evEnc = Encoders.product[Ev]
-    val input = MemoryStream[Ev]
-    val q = StateStores.withProvider(spark) {
-      examples(input.toDS())
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: Dataset[Example], _: Long) =>
-          // harness-side collect: draining one micro-batch's OUTPUT rows
-          val rows = batch.collect()
-          out.synchronized { out ++= rows }
-          ()
-        }
-        .start()
+    val rows = Replay.run(spark, Replay.chunks(feed, nChunks))(
+        examples(_).toDF()) { batch =>
+      // harness-side collect: draining one micro-batch's OUTPUT rows
+      batch.as[Example].collect().toSeq
     }
-    try {
-      feed.grouped(math.max(1, (feed.size + nChunks - 1) / nChunks))
-        .foreach { chunk => input.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    out.toSeq.toDF()
+    rows.toDF()
       .select("user_id", "event_id", "ts_sec", "context", "target")
       .orderBy("user_id", "event_id")
   }

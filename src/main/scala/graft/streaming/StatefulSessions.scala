@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -122,42 +121,30 @@ object StatefulSessions {
     *
     * This is a correctness replay harness for a bounded fixture, not
     * the production shape — there the same `sessionize` runs on a
-    * readStream source and the driver-side addData below doesn't
+    * readStream source and the driver-side feed below doesn't
     * exist. The collect is the harness feeding the source, not the
     * operator. */
   def qStreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    implicit val ctx = spark.sqlContext
-    implicit val evEnc = Encoders.product[SessionEvent]
+    import spark.implicits._
     val evs = graft.Tables.eventsNorm(spark, dir)
       .select(col("user_id").cast("long").as("user_id"), col("ts_sec"),
               col("event_type"))
       .as[SessionEvent]
       // harness-side collect: feeding the MemoryStream (bounded fixture)
-      .collect()
-    val maxSec = evs.iterator.map(_.ts_sec).max
-    val input = MemoryStream[SessionEvent]
-    val withTime = input.toDS()
-      .withColumn("event_time", timestamp_seconds(col("ts_sec")))
-      .withWatermark("event_time", "0 seconds")
-      .as[SessionEvent]
-    val sink = "stream_sessions_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q = StateStores.withProvider(spark) {
-      sessionize(withTime)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode("append").start()
+      .collect().toSeq
+    val maxSec = evs.iterator.map(_.ts_sec).maxOption.getOrElse(0L)
+    def sentinel(gaps: Long) =
+      Seq(SessionEvent(-1L, maxSec + gaps * DefaultGapSeconds, "view"))
+    val closed = Replay.run(spark, Seq(evs, sentinel(2), sentinel(4)))(
+        in => sessionize(
+          in.withColumn("event_time", timestamp_seconds(col("ts_sec")))
+            .withWatermark("event_time", "0 seconds")
+            .as[SessionEvent]).toDF()) { batch =>
+      // harness-side collect: draining one micro-batch's OUTPUT rows
+      batch.as[SessionOut].collect().toSeq
     }
-    try {
-      input.addData(evs.toIndexedSeq)
-      q.processAllAvailable()
-      input.addData(SessionEvent(-1L, maxSec + 2 * DefaultGapSeconds, "view"))
-      q.processAllAvailable()
-      input.addData(SessionEvent(-1L, maxSec + 4 * DefaultGapSeconds, "view"))
-      q.processAllAvailable()
-    } finally q.stop()
-    // the memory sink's table outlives the stopped query; read it lazily
     val w = Window.partitionBy("user_id").orderBy("start_sec")
-    spark.table(sink).where(col("user_id") >= 0)
+    closed.toDF().where(col("user_id") >= 0)
       .withColumn("session_idx", row_number().over(w).cast("long"))
       .select("user_id", "session_idx", "start_sec", "visit_length",
               "step_length", "purchases")

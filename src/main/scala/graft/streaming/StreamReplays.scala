@@ -1,13 +1,11 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import scala.collection.mutable.ArrayBuffer
 
 /** Streaming-replay CORRECTNESS gates for the continuous-ingestion
   * operators: each runs the PRODUCTION streaming shape — a real
-  * `foreachBatch` query fed by MemoryStream, with the standing store
+  * `foreachBatch` query driven by [[Replay.run]], with the standing store
   * (eval shingles / corpus signatures) computed once and reused by
   * every micro-batch — over the bounded fixture, and must hash-match
   * the same DuckDB oracle as its batch twin. The specs
@@ -18,51 +16,6 @@ import scala.collection.mutable.ArrayBuffer
   * production writes each batch's output to a sink instead.
   */
 object StreamReplays {
-
-  /** Drive `docs` through foreachBatch in `nChunks` micro-batches,
-    * collecting `perBatch`'s output rows. */
-  private def replay[T](spark: SparkSession, docs: Seq[(Long, String)],
-                        nChunks: Int)(
-      perBatch: DataFrame => Seq[T]): Seq[T] = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val out = ArrayBuffer[T]()
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        out.synchronized { out ++= perBatch(batch) }
-        ()
-      }
-      .start()
-    try {
-      docs.grouped(math.max(1, (docs.size + nChunks - 1) / nChunks))
-        .foreach { chunk => input.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    out.toSeq
-  }
-
-  /** [[replay]] for (vec_id, embedding) feeds. */
-  private def replayVec[T](spark: SparkSession,
-                           vecs: Seq[(Long, Seq[Float])], nChunks: Int)(
-      perBatch: DataFrame => Seq[T]): Seq[T] = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val out = ArrayBuffer[T]()
-    val input = MemoryStream[(Long, Seq[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        out.synchronized { out ++= perBatch(batch) }
-        ()
-      }
-      .start()
-    try {
-      vecs.grouped(math.max(1, (vecs.size + nChunks - 1) / nChunks))
-        .foreach { chunk => input.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    out.toSeq
-  }
 
   /** Streaming twin of the emb_kmeans gate (same oracle): vectors
     * stream in micro-batches and each batch is assigned against the
@@ -80,35 +33,14 @@ object StreamReplays {
       // before a driver collect is pure harness overhead (r14):
       // harness-side collect + driver sort
       .as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq
-    val rows = replayVec(spark, feed, nChunks = 3) { batch =>
+    val rows = Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("vec_id", "embedding")) { batch =>
       graft.operators.Clustering.assignAgainstCorpusModel(spark, dir, batch)
         // harness-side collect: draining one micro-batch's OUTPUT rows
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .toSeq
     }
     rows.toDF("vec_id", "cluster", "dist").orderBy("vec_id")
-  }
-
-  /** [[replay]] for (doc_id, text, source) feeds. */
-  private def replay3[T](spark: SparkSession, docs: Seq[(Long, String, String)],
-                         nChunks: Int)(
-      perBatch: DataFrame => Seq[T]): Seq[T] = {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    val out = ArrayBuffer[T]()
-    val input = MemoryStream[(Long, String, String)]
-    val q = input.toDF().toDF("doc_id", "text", "source")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        out.synchronized { out ++= perBatch(batch) }
-        ()
-      }
-      .start()
-    try {
-      docs.grouped(math.max(1, (docs.size + nChunks - 1) / nChunks))
-        .foreach { chunk => input.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    out.toSeq
   }
 
   /** CONTINUOUS corpus-overlap monitoring: docs stream in
@@ -131,7 +63,8 @@ object StreamReplays {
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
     var standing: Seq[(String, String)] = Vector.empty
-    replay3(spark, feed, nChunks = 3) { batch =>
+    Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("doc_id", "text", "source")) { batch =>
       val merged = graft.operators.TextAnalysis.kmvMerge(
         graft.operators.TextAnalysis.kmvSketch(batch, k)
           .unionByName(standing.toDF("source", "h")), k)
@@ -159,7 +92,8 @@ object StreamReplays {
       .select("doc_id", "text")
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val rows = replay(spark, train, nChunks = 3) { batch =>
+    val rows = Replay.run(spark, Replay.chunks(train, 3))(
+        _.toDF("doc_id", "text")) { batch =>
       graft.operators.TextAnalysis.decontaminateAgainst(
           evalSh, graft.operators.TextAnalysis.shingleSet(batch, w))
         // harness-side collect: draining one micro-batch's OUTPUT rows
@@ -186,7 +120,8 @@ object StreamReplays {
       .select("doc_id", "text")
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val rows = replay(spark, feed, nChunks = 3) { batch =>
+    val rows = Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("doc_id", "text")) { batch =>
       graft.operators.TextAnalysis.dsirScore(batch, tgt, raw)
         // harness-side collect: draining one micro-batch's OUTPUT rows
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -221,8 +156,9 @@ object StreamReplays {
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String, String)].collect().sortBy(_._1).toSeq
     var standing = Map.empty[(String, String), Long]
-    replay3(spark, feed, nChunks = 3) { batch =>
-      val batchCounts = batch.toDF("ida", "winner", "loser")
+    Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("ida", "winner", "loser")) { batch =>
+      val batchCounts = batch
         .groupBy("winner", "loser").agg(count(lit(1)).as("c"))
         // harness-side collect: per-batch duel counts are k²-bounded
         // MODEL state, merged additively into the standing map
@@ -247,7 +183,8 @@ object StreamReplays {
       .select("doc_id", "text")
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
-    val rows = replay(spark, stream, nChunks = 3) { batch =>
+    val rows = Replay.run(spark, Replay.chunks(stream, 3))(
+        _.toDF("doc_id", "text")) { batch =>
       // lifecycle-safe per-batch body: batch signatures cached for the
       // band join + verify, unpersisted after the collect; the
       // standing corpus cache is untouched across micro-batches
@@ -289,7 +226,8 @@ object StreamReplays {
     // standing MG summary + running token total: driver model state
     var standing = Map.empty[String, Long]
     var total = 0L
-    replay(spark, feed, nChunks = 3) { batch =>
+    Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("doc_id", "text")) { batch =>
       val parts = batch
         .select(explode(graft.functions.Text.tokens(col("text"))).as("token"))
         .as[String]
@@ -335,7 +273,8 @@ object StreamReplays {
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     // standing histogram: ≤ DriftBuckets entries of driver model state
     var standing = Map.empty[Long, Long]
-    replay(spark, feed, nChunks = 3) { batch =>
+    Replay.run(spark, Replay.chunks(feed, 3))(
+        _.toDF("doc_id", "text")) { batch =>
       // the batch histogram is ≤ DriftBuckets rows of driver MODEL
       // state (the KMV standing-sketch class), merged additively:
       // harness-side collect
@@ -370,7 +309,6 @@ object StreamReplays {
     * the batch vs state-store lookup, never a corpus rescan. */
   def qStreamDedupWatermark(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     val feed = graft.Tables.eventsNorm(spark, dir)
       .select(col("user_id"), col("event_type"), col("ts_sec"))
       // driver sort in the same (ts_sec, user_id, event_type) order —
@@ -378,30 +316,17 @@ object StreamReplays {
       // engine's UTF8 binary order: harness-side collect + sort
       .as[(Long, String, Long)].collect()
       .sortBy(t => (t._3, t._1, t._2)).toSeq
-    val out = ArrayBuffer[(Long, String)]()
-    val input = MemoryStream[(Long, String, Long)]
-    val q = StateStores.withProvider(spark) {
-      input.toDF().toDF("user_id", "event_type", "ts_sec")
-        .withColumn("event_time", timestamp_seconds(col("ts_sec")))
-        .withWatermark("event_time", "4000 hours")
-        .dropDuplicatesWithinWatermark("user_id", "event_type")
-        .select("user_id", "event_type")
-        .writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // harness-side collect: draining one micro-batch's OUTPUT rows
-          val rows = batch.collect().map(r => (r.getLong(0), r.getString(1)))
-          out.synchronized { out ++= rows }
-          ()
-        }
-        .start()
+    val rows = Replay.run(spark, Replay.chunks(feed ++ feed, 6))(
+        // feed ++ feed: the duplicate injection
+        _.toDF("user_id", "event_type", "ts_sec")
+          .withColumn("event_time", timestamp_seconds(col("ts_sec")))
+          .withWatermark("event_time", "4000 hours")
+          .dropDuplicatesWithinWatermark("user_id", "event_type")
+          .select("user_id", "event_type")) { batch =>
+      // harness-side collect: draining one micro-batch's OUTPUT rows
+      batch.collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     }
-    try {
-      val passes = feed ++ feed // the duplicate injection
-      passes.grouped(math.max(1, (passes.size + 5) / 6))
-        .foreach { chunk => input.addData(chunk); q.processAllAvailable() }
-    } finally q.stop()
-    out.toSeq.toDF("user_id", "event_type").orderBy("user_id", "event_type")
+    rows.toDF("user_id", "event_type").orderBy("user_id", "event_type")
   }
 
   /** SERVED-INDEX ANN: query vectors stream in micro-batches against
@@ -418,33 +343,22 @@ object StreamReplays {
     * sim_ivf_indexed (three plans, one semantics). */
   def qStreamAnnSearch(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     graft.operators.Similarity.buildIvfIndex(spark, dir, "ivf_stream_index")
     val queries = graft.Tables.embeddings(spark, dir)
       .where(col("vec_id") < 10)
       .select("vec_id", "embedding").orderBy("vec_id")
       // harness-side collect: feeding the MemoryStream (10 query rows)
       .as[(Long, Array[Float])].collect().toSeq
-    val out = ArrayBuffer[(Long, Long, Long, Double)]()
-    val input = MemoryStream[(Long, Array[Float])]
-    val q = input.toDF().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = graft.operators.Similarity.searchIvfIndexFor(
-            spark, "ivf_stream_index", batch, nProbes = 1)
-          // harness-side collect: draining one micro-batch's OUTPUT rows
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        out.synchronized { out ++= rows }
-        ()
-      }
-      .start()
-    try {
-      queries.grouped(4).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-    } finally q.stop()
-    out.toSeq.toDF("q_id", "rank", "neighbor_id", "sim")
+    val rows = Replay.run(spark, Replay.chunks(queries, 3))(
+        _.toDF("vec_id", "embedding")) { batch =>
+      graft.operators.Similarity.searchIvfIndexFor(
+          spark, "ivf_stream_index", batch, nProbes = 1)
+        // harness-side collect: draining one micro-batch's OUTPUT rows
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    }
+    rows.toDF("q_id", "rank", "neighbor_id", "sim")
       .orderBy("q_id", "rank")
   }
 
@@ -462,33 +376,22 @@ object StreamReplays {
     * (three plans, one semantics). */
   def qStreamBm25Search(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    implicit val ctx = spark.sqlContext
     graft.operators.TextAnalysis.buildTextIndex(spark, dir,
       "bm25_stream_index")
     val queries = Seq(
       (0L, "spark table query"),
       (1L, "stream window agg"),
       (2L, "fast vector scan"))
-    val out = ArrayBuffer[(Long, Long, Long, Double)]()
-    val input = MemoryStream[(Long, String)]
-    val q = input.toDF().toDF("q_id", "q_text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val rows = graft.operators.TextAnalysis.searchTextIndex(
-            spark, "bm25_stream_index", batch)
-          // harness-side collect: draining one micro-batch's OUTPUT rows
-          .collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        out.synchronized { out ++= rows }
-        ()
-      }
-      .start()
-    try {
-      queries.grouped(2).foreach { chunk =>
-        input.addData(chunk); q.processAllAvailable()
-      }
-    } finally q.stop()
-    out.toSeq.toDF("q_id", "rank", "doc_id", "score")
+    val rows = Replay.run(spark, Replay.chunks(queries, 2))(
+        _.toDF("q_id", "q_text")) { batch =>
+      graft.operators.TextAnalysis.searchTextIndex(
+          spark, "bm25_stream_index", batch)
+        // harness-side collect: draining one micro-batch's OUTPUT rows
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+        .toSeq
+    }
+    rows.toDF("q_id", "rank", "doc_id", "score")
       .orderBy("q_id", "rank")
   }
 
@@ -521,7 +424,8 @@ object StreamReplays {
       // harness-side collect + driver sort (see qStreamClusterAssign)
       .as[(Long, String)].collect().sortBy(_._1).toSeq
     var base = 0L
-    val rows = replay(spark, stream, nChunks) { batch =>
+    val rows = Replay.run(spark, Replay.chunks(stream, nChunks))(
+        _.toDF("doc_id", "text")) { batch =>
       val packed = graft.operators.Packing.packFromCounts(
         graft.operators.TextAnalysis.chunkDocs(batch)
           .where(col("n_chunk_tokens") > 0)

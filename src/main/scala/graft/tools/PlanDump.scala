@@ -1,16 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for declared queries into files —
   * the optimization-round artifact (`plans/r14/<query>_before.txt` /
   * `_after.txt`). Usage:
   *
   *   sbt "runMain graft.tools.PlanDump <outDir> <suffix> [query ...]"
   *
-  * Plans are captured under the SAME session config the bench uses
-  * (shuffle.partitions = SPARK_GRAFT_CPUS, AQE on), so Exchange
-  * counts / join strategies in the dumps are the bench's. Queries
+  * Plans are captured under the SAME session the bench uses
+  * ([[graft.LocalSession]]: shuffle.partitions = SPARK_GRAFT_CPUS,
+  * default 4, AQE on), so Exchange counts / join strategies in the
+  * dumps are the bench's. Queries
   * whose result frame is harness-built (stream replays collect into
   * a local DF) still dump — the file then shows the local-relation
   * tail and the interesting plan is in the per-batch bodies, which
@@ -23,15 +22,7 @@ object PlanDump {
     val suffix = args(1)
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.SparkEntry.queries
     names.foreach { n =>

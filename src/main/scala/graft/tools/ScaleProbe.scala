@@ -22,15 +22,7 @@ object ScaleProbe {
     val only: Option[Set[String]] = args.lift(1).map(_.split(',').toSet)
     val src = "/root/testdata/sf0.1"
     val dst = s"/tmp/graft_sfbig_x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     // events.ts is INT64 nanos — read as long (replicas then store long)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 

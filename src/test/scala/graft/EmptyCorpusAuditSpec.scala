@@ -30,16 +30,7 @@ class EmptyCorpusAuditSpec extends SparkSpec {
     dir
   }
 
-  // Streaming replays and index round-trips drive real streams /
-  // catalog tables — they are exercised on empty batches by their own
-  // suites; auditing them here would mostly test the harness. Keep
-  // the audit to the batch query surface.
-  private val skip = Set(
-    "stream_sessions", "stream_dedup_incremental", "stream_decontaminate",
-    "stream_chunk_pack", "stream_ann_search", "stream_overlap_kmv")
-
   SparkEntry.queries.keys.toSeq.sorted
-    .filterNot(skip)
     .foreach { name =>
       test(s"$name survives an all-empty corpus") {
         val out = SparkEntry.queries(name)(spark, emptyDir)

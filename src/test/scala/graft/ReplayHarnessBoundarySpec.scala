@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * level: every `.collect(` in the streaming package must carry an
   * adjacent `harness-side collect` marker declaring which side it is
   * on, and the per-batch bodies must route through the batch operator
-  * entry points rather than reimplementing them.
+  * entry points rather than reimplementing them. The feed loop itself
+  * lives in ONE place, [[graft.streaming.Replay]]: no other main
+  * source may build a MemoryStream or drive a query with
+  * processAllAvailable, so hand-rolled replay copies cannot return.
   */
 class ReplayHarnessBoundarySpec extends AnyFunSuite {
 
@@ -41,6 +44,28 @@ class ReplayHarnessBoundarySpec extends AnyFunSuite {
       "per-batch operator body it is a corpus-side collect (the replay " +
       "gates' forbidden scale bug); move it harness-side or mark it:\n" +
       offenders.mkString("\n"))
+  }
+
+  test("only Replay.scala feeds a MemoryStream or calls processAllAvailable") {
+    val mainDir = new java.io.File("src/main/scala")
+    assert(mainDir.isDirectory,
+      s"main source dir not found at ${mainDir.getAbsolutePath}")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Seq.empty
+      }
+    val offenders = for {
+      f <- files(mainDir)
+      if !f.getPath.endsWith("graft/streaming/Replay.scala")
+      (line, i) <- scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .zipWithIndex.toList
+      if line.contains("processAllAvailable") || line.contains("MemoryStream[")
+    } yield s"${f.getPath}:${i + 1}: $line"
+    assert(offenders.isEmpty,
+      "replay loop outside graft.streaming.Replay — route it through " +
+      "Replay.run:\n" + offenders.mkString("\n"))
   }
 
   test("replay per-batch bodies write through the batch operators, not reimplementations") {
