@@ -786,9 +786,11 @@ object Dedup {
         explode(sequence(lit(1), col("n") - (w - 1))).as("p"))
       .select(col("doc_id"), col("n"), col("p"),
         md5(concat_ws(" ", slice(col("toks"), col("p"), lit(w)))).as("h"))
+    // held by ≥2 distinct docs ⇔ min < max (both ignore nulls): one
+    // hash aggregate, where countDistinct takes a second shuffle
     val shared = wins.groupBy("h")
-      .agg(countDistinct("doc_id").as("nd"))
-      .where(col("nd") >= 2)
+      .agg(min("doc_id").as("lo"), max("doc_id").as("hi"))
+      .where(col("lo") < col("hi"))
       .select("h")
     val cov = wins.join(shared, "h").select("doc_id", "n", "p")
     val byPos = Window.partitionBy("doc_id").orderBy("p")
@@ -935,8 +937,10 @@ object Dedup {
     * rows included): a rewrite operator that silently drops clean
     * docs would be a corpus cut, not a cleanup. */
   def qVerbatimRewrite(spark: SparkSession, dir: String): DataFrame =
-    verbatimRewrite(Tables.documents(spark, dir))
+    verbatimRewrite(Tables.documents(spark, dir)).orderBy("doc_id")
 
+  /** [[qVerbatimRewrite]] without its output sort, for compositions
+    * that re-key the rows anyway (`pipeline_chunked_pretrain`). */
   private[graft] def verbatimRewrite(documents: DataFrame): DataFrame = {
     val w = VerbatimWindow
     val toksDf = documents
@@ -947,9 +951,10 @@ object Dedup {
         explode(sequence(lit(1), col("n") - (w - 1))).as("p"))
       .select(col("doc_id"), col("p"),
         md5(concat_ws(" ", slice(col("toks"), col("p"), lit(w)))).as("h"))
+    // shared ⇔ owner < max, as in verbatimCoverage
     val owners = wins.groupBy("h")
-      .agg(min("doc_id").as("owner"), countDistinct("doc_id").as("nd"))
-      .where(col("nd") >= 2)
+      .agg(min("doc_id").as("owner"), max("doc_id").as("last"))
+      .where(col("owner") < col("last"))
       .select("h", "owner")
     val ivs = wins.join(owners, "h")
       .where(col("doc_id") =!= col("owner"))
@@ -969,7 +974,6 @@ object Dedup {
       .select(col("doc_id"),
         (col("n") - size(col("kept"))).cast("long").as("n_removed"),
         concat_ws(" ", col("kept")).as("clean_text"))
-      .orderBy("doc_id")
   }
 
   /** Builtin/HOF twin of [[graft.functions.RemoveIntervals]] — the

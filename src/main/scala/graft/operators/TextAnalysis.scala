@@ -316,6 +316,7 @@ object TextAnalysis {
     decontaminateAgainst(
       docs.where(isEval).select("sh").distinct(),
       docs.where(!isEval))
+      .orderBy("doc_id")
   }
 
   /** Model-based quality filtering, fastText-classifier-shaped: each
@@ -716,14 +717,15 @@ object TextAnalysis {
     * (the decontamination twin of `Dedup.incrementalNearDupSigs`).
     * Per-doc counts are independent across batches, so micro-batch
     * results union to exactly the one-shot run
-    * (StreamingDecontaminationSpec asserts it). */
+    * (StreamingDecontaminationSpec asserts it). Rows come unsorted:
+    * every caller either sorts at its query boundary or discards
+    * the order. */
   private[graft] def decontaminateAgainst(evalShingles: DataFrame,
                                           trainShingled: DataFrame): DataFrame =
     trainShingled
       .join(broadcast(evalShingles), "sh")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shared"))
-      .orderBy("doc_id")
 
   /** Repetition quality signals (the Gopher/MassiveText filter
     * family): per document,
