@@ -643,19 +643,6 @@ object Dedup {
     s"dedup_clusters_$h"
   }
 
-  /** Key under which the corpus fingerprint persists on the cluster
-    * table; rebuild triggers when the stored value goes stale. */
-  private val FingerprintProp = "graft.corpus.fingerprint"
-
-  /** Content identity of the `documents` table backing `dir`: an MD5
-    * over every data file's (relative name, length, mtime), sorted.
-    * Cheap — a directory listing, no file reads, no Spark job — and
-    * it changes whenever a rewrite, compaction, or incremental batch
-    * lands in the same dir (any of those replaces or adds part
-    * files). */
-  private[graft] def corpusFingerprint(dir: String): String =
-    graft.core.ModelCache.fingerprint(s"$dir/documents.parquet")
-
   /** The verified-pair cluster table with the BUILD-ONCE treatment the
     * IVF index got: signatures → band join → cosine verify →
     * connected components run ONCE per (session, corpus) and persist
@@ -665,21 +652,18 @@ object Dedup {
     * the artifact a curation run actually ships between stages — the
     * pair derivation is days of work, membership lookups are not.
     * Staleness is self-detected: the build stamps the corpus
-    * [[corpusFingerprint]] as a table property, and a corpus
+    * fingerprint (an MD5 over every `documents` data file's name,
+    * length and mtime — a directory listing, no Spark job) through
+    * [[graft.sources.StandingTable.buildOnce]], and a corpus
     * rewritten in-session (fixture regeneration, incremental batches
     * landing in the same dir) mismatches at next read and triggers a
     * rebuild — downstream gates never depend on hidden catalog
     * state. */
   def clustersTableFor(spark: SparkSession, dir: String): DataFrame = {
     val name = clustersTableName(dir)
-    val fp = corpusFingerprint(dir)
-    val fresh = spark.catalog.tableExists(name) &&
-      spark.sql(s"SHOW TBLPROPERTIES $name('$FingerprintProp')")
-        .collect().headOption.exists(_.getString(1) == fp)
-    if (!fresh) {
+    graft.sources.StandingTable.buildOnce(spark, name,
+        graft.core.ModelCache.fingerprint(s"$dir/documents.parquet")) {
       graft.sources.Readers.replaceTable(qDedupClusters(spark, dir), name)
-      spark.sql(
-        s"ALTER TABLE $name SET TBLPROPERTIES ('$FingerprintProp'='$fp')")
     }
     spark.table(name)
   }

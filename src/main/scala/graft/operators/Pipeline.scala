@@ -145,17 +145,27 @@ object Pipeline {
     val docs = Tables.documents(spark, dir)
     val isEval = col("doc_id") % 20 === 0
     val survivors = curatedSurvivors(docs.where(!isEval)).cache()
+    decontaminateAndPack(spark, dir, docs.where(isEval), survivors,
+      TextAnalysis.decontaminateAgainst)
+  }
 
-    // stage 4: decontamination against the raw eval slice
-    val evalSh = TextAnalysis.shingleSet(docs.where(isEval), 4)
+  /** Stages 4–5, shared by both corpus builds: survivors sharing more
+    * than [[ContaminationMax]] distinct 4-grams with the RAW eval
+    * slice are dropped (`decontaminate` maps (eval shingle set,
+    * survivor shingles) to per-doc `n_shared`), then the rest is
+    * concat-and-chunk packed, bucket width from the full-table footer
+    * count. */
+  private def decontaminateAndPack(
+      spark: SparkSession, dir: String, evalDocs: DataFrame,
+      survivors: DataFrame,
+      decontaminate: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val evalSh = TextAnalysis.shingleSet(evalDocs, 4)
       .select("sh").distinct()
-    val contaminated = TextAnalysis.decontaminateAgainst(
+    val contaminated = decontaminate(
         evalSh, TextAnalysis.shingleSet(survivors, 4))
       .where(col("n_shared") > ContaminationMax)
       .select("doc_id")
     val clean = survivors.join(contaminated, Seq("doc_id"), "left_anti")
-
-    // stage 5: concat-and-chunk packing of the curated corpus
     val n = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
     Packing.packTokens(
         clean.withColumn("n_bpe_tokens",
@@ -175,10 +185,10 @@ object Pipeline {
     *   → BLOOM-prefiltered decontamination (the index-scale form) →
     *   sequence packing.
     *
-    * Stages 2–3 and 5 are byte-identical to [[qPretrainCorpus]]
-    * ([[dedupStages]] / [[Packing.packTokens]]); what changes is the
-    * gate (model score instead of heuristics — filtering happens on
-    * the unrounded probability, exactly like the standalone
+    * Stages 2–5 share [[qPretrainCorpus]]'s code ([[dedupStages]] /
+    * [[decontaminateAndPack]]); what changes is the gate (model
+    * score instead of heuristics — filtering happens on the
+    * unrounded probability, exactly like the standalone
     * text_quality_classifier gate) and the decontamination plan shape
     * (map-side Bloom probe + exact verify — same rows by the
     * one-sided-filter argument, cheaper shuffle). One oracle checks
@@ -197,24 +207,9 @@ object Pipeline {
     // stages 2–3: shared dedup
     val survivors = dedupStages(gated).cache()
 
-    // stage 4: Bloom-prefiltered decontamination vs the RAW eval slice
-    val evalSh = TextAnalysis.shingleSet(docs.where(isEval), 4)
-      .select("sh").distinct()
-    val contaminated = TextAnalysis.decontaminateBloomAgainst(
-        evalSh, TextAnalysis.shingleSet(survivors, 4))
-      .where(col("n_shared") > ContaminationMax)
-      .select("doc_id")
-    val clean = survivors.join(contaminated, Seq("doc_id"), "left_anti")
-
-    // stage 5: packing, bucket width from the full-table footer count
-    val n = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-    Packing.packTokens(
-        clean.withColumn("n_bpe_tokens",
-          TextAnalysis.bpeTokenCount(col("text"))),
-        Packing.bucketWidthFor(n))
-      .select("doc_id", "lang", "quality", "n_bpe_tokens",
-              "seq_id", "seq_offset")
-      .orderBy("doc_id")
+    // stages 4–5: Bloom-prefiltered decontamination, then packing
+    decontaminateAndPack(spark, dir, docs.where(isEval), survivors,
+      TextAnalysis.decontaminateBloomAgainst(_, _))
   }
 
   /** Epoch-aware training-order assembly — the step between "which
@@ -270,24 +265,6 @@ object Pipeline {
     * than corrupt silently. */
   private val ChunkKeyStride = 256L
 
-  /** The CHUNK-level pretraining assembly — the round-11 operators
-    * composed into the shape a context-window training run actually
-    * consumes: content-hash TRAIN split (held-out buckets never seen:
-    * [[Mixing.qHashSplit]]'s rule) → verbatim span REMOVAL within the
-    * train corpus ([[Dedup.verbatimRewrite]] — owners keep, repeats
-    * cut) → context-window chunking of the cleaned text
-    * ([[TextAnalysis.chunkDocs]]) → two-phase prefix-sum packing of
-    * the chunks ([[Packing.packFromCounts]]). Empty chunks (docs
-    * fully consumed by dedup) are dropped — a zero-token training row
-    * is padding, not data.
-    *
-    * Composition is frame-level: each stage consumes the previous
-    * frame's columns, so the corpus is scanned once at the head; the
-    * shuffles are the rewrite's window index, the chunk explode's
-    * output (map-side), and the pack's two window phases — nothing
-    * new is introduced by composing. The pack key is
-    * doc_id·[[ChunkKeyStride]]+chunk_id, decomposed back in the
-    * output, so packing order is (doc, chunk) order. */
   /** CORPUS VERSION DIFF — the audit every dataset release runs:
     * given two versions of a document collection, report which docs
     * were ADDED, REMOVED, or CHANGED (content-hash inequality under
@@ -505,6 +482,24 @@ object Pipeline {
       .orderBy("entry", "k")
   }
 
+  /** The CHUNK-level pretraining assembly — the round-11 operators
+    * composed into the shape a context-window training run actually
+    * consumes: content-hash TRAIN split (held-out buckets never seen:
+    * [[Mixing.qHashSplit]]'s rule) → verbatim span REMOVAL within the
+    * train corpus ([[Dedup.verbatimRewrite]] — owners keep, repeats
+    * cut) → context-window chunking of the cleaned text
+    * ([[TextAnalysis.chunkDocs]]) → two-phase prefix-sum packing of
+    * the chunks ([[Packing.packFromCounts]]). Empty chunks (docs
+    * fully consumed by dedup) are dropped — a zero-token training row
+    * is padding, not data.
+    *
+    * Composition is frame-level: each stage consumes the previous
+    * frame's columns, so the corpus is scanned once at the head; the
+    * shuffles are the rewrite's window index, the chunk explode's
+    * output (map-side), and the pack's two window phases — nothing
+    * new is introduced by composing. The pack key is
+    * doc_id·[[ChunkKeyStride]]+chunk_id, decomposed back in the
+    * output, so packing order is (doc, chunk) order. */
   def qChunkedPretrain(spark: SparkSession, dir: String): DataFrame = {
     val nDocs = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
     val train = Tables.documents(spark, dir)

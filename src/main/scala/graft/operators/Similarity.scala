@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions.cosine
+import graft.sources.StandingTable
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors). Brute-force cosine top-k as the exact baseline; an
@@ -814,37 +815,22 @@ object Similarity {
     * probe's cells are co-located and prunable. Vectors are NOT
     * stored — codes + (vmin, scl) are the 4×-smaller memory contract;
     * `recon = vmin + code·scl` at search time is bit-identical to
-    * the recompute path's [[Vectors.sq8ReconWith]]. */
-  /** Corpus-fingerprint stamp for dir-keyed index builds — the
-    * build-once rule of the cluster table ([[graft.operators.Dedup]])
-    * applied to the served index: a gate (or a serving session)
-    * re-entering the build for an UNCHANGED corpus must skip straight
-    * to search, not rewrite the table per query batch. The stamp
-    * encodes corpus fingerprint + build dials; [[appendToIvfIndex]]
-    * overwrites it (an appended index no longer equals a fresh
-    * build), and [[compactIvfIndex]] carries it across the swap
-    * (compaction preserves contents). */
-  private val FingerprintProp = "graft.fingerprint"
-
-  private def tableProp(spark: SparkSession, name: String,
-                        key: String): Option[String] =
-    graft.sources.Readers.tableProp(spark, name, key)
-
+    * the recompute path's [[Vectors.sq8ReconWith]]. Build-once
+    * ([[graft.sources.StandingTable]]): the stamp is the corpus
+    * fingerprint plus the build dials, so a gate (or a serving
+    * session) re-entering the build for an UNCHANGED corpus skips
+    * straight to search instead of rewriting the table per query
+    * batch. */
   def buildIvfIndex(spark: SparkSession, dir: String, name: String,
                     numCentroids: Int = NumCentroids,
-                    twoLevel: Boolean = false): Unit = {
-    val stamp = graft.core.ModelCache.fingerprint(
-      s"$dir/embeddings.parquet") + s"|$numCentroids|$twoLevel"
-    val fresh = spark.catalog.tableExists(name) &&
-      spark.catalog.tableExists(s"${name}_centroids") &&
-      tableProp(spark, name, FingerprintProp).contains(stamp)
-    if (!fresh) {
+                    twoLevel: Boolean = false): Unit =
+    StandingTable.buildOnce(spark, name,
+        graft.core.ModelCache.fingerprint(s"$dir/embeddings.parquet") +
+          s"|$numCentroids|$twoLevel",
+        Seq(s"${name}_centroids")) {
       buildIvfIndexFrom(Tables.embeddings(spark, dir), name, numCentroids,
         twoLevel)
-      spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-        s"('$FingerprintProp'='$stamp')")
     }
-  }
 
   /** Table property recording which coarse-assignment rule built the
     * index (`flat` exact argmax vs `twolevel` hierarchical). Appends
@@ -852,25 +838,26 @@ object Similarity {
     * parameter: an append or probe under the other rule would
     * silently put vectors and queries in different cells than the
     * build did — the same divergence class the quantizer-retrain ban
-    * guards against. */
+    * guards against. The staged swap carries it with every other
+    * `graft.*` property. */
   private val AssignModeProp = "graft.assign"
 
   /** Per-(session, table) memo for the assignment mode. The property
-    * is immutable after build — the only writers are [[buildIvfIndexFrom]]
-    * (which re-stamps the memo) and [[compactIvfIndex]] (which carries
-    * the mode across the swap and invalidates the entry anyway) — so a
-    * cached read can never be stale. Without the memo every search paid
-    * a `SHOW TBLPROPERTIES` + collect of catalog metadata per query
-    * (the r11 sim_ivf_indexed regression); a served index answering
-    * thousands of query batches should hit the catalog once. Keyed on
-    * the session INSTANCE: a new session (new catalog view) re-reads. */
+    * is immutable after build — [[buildIvfIndexFrom]] re-stamps the
+    * memo, and the two staged-swap rewrites ([[deleteFromIvfIndex]],
+    * [[compactIvfIndex]]) carry the property and invalidate the entry
+    * anyway, as the only catalog mutations after build — so a cached
+    * read can never be stale. Without the memo every search paid a
+    * catalog-property read + collect per query (the r11
+    * sim_ivf_indexed regression); a served index answering thousands
+    * of query batches should hit the catalog once. Keyed on the
+    * session INSTANCE: a new session (new catalog view) re-reads. */
   private val assignModeMemo =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Boolean]
 
   private def assignModeOf(spark: SparkSession, name: String): Boolean =
     assignModeMemo.computeIfAbsent((spark, name), _ =>
-      spark.sql(s"SHOW TBLPROPERTIES $name('$AssignModeProp')")
-        .collect().headOption.exists(_.getString(1) == "twolevel"))
+      StandingTable.prop(spark, name, AssignModeProp).contains("twolevel"))
 
   /** Index rows for any vector frame against a given quantizer —
     * the one definition shared by full build and incremental append
@@ -905,9 +892,8 @@ object Similarity {
     graft.sources.Readers.saveBucketedTable(indexRows(emb, cent, twoLevel),
       name, buckets = IndexFileBuckets, bucketCol = "bucket")
     graft.sources.Readers.replaceTable(cent, s"${name}_centroids")
-    val mode = if (twoLevel) "twolevel" else "flat"
-    emb.sparkSession.sql(
-      s"ALTER TABLE $name SET TBLPROPERTIES ('$AssignModeProp'='$mode')")
+    StandingTable.setProps(emb.sparkSession, name,
+      AssignModeProp -> (if (twoLevel) "twolevel" else "flat"))
     assignModeMemo.put((emb.sparkSession, name), twoLevel)
   }
 
@@ -917,50 +903,21 @@ object Similarity {
     * IVF append contract) and their rows appended to the bucketed
     * table. Cost is one pass over the batch; existing cells are
     * untouched, so a 100 TB index absorbs a daily batch without a
-    * rebuild. IvfIndexSpec pins append ≡ full rebuild. */
+    * rebuild. The build-once stamp drops to "appended". IvfIndexSpec
+    * pins append ≡ full rebuild. */
   def appendToIvfIndex(spark: SparkSession, name: String,
                        batch: DataFrame): Unit = {
     indexRows(batch, spark.table(s"${name}_centroids"),
         assignModeOf(spark, name))
       .write.bucketBy(IndexFileBuckets, "bucket").sortBy("bucket")
       .mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(name)
-    // an appended index no longer equals a fresh dir build — drop the
-    // build-once stamp so the next dir-keyed build rebuilds
-    spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-      s"('$FingerprintProp'='appended')")
+    StandingTable.markAppended(spark, name)
   }
 
-  /** COMPACTION — the maintenance half of the append story: every
-    * [[appendToIvfIndex]] batch adds a file set (up to one file per
-    * file-bucket per writing task), so daily appends at scale are a
-    * small-files explosion — each probed cell degrades into many tiny
-    * reads. When the average file count per file-bucket passes
-    * `maxFilesPerBucket`, rewrite the index in ONE distributed pass
-    * into a staging table (same bucketing spec) and swap it in via a
-    * catalog rename — rows never touch the driver, and search plans
-    * (bucket pruning included) are unchanged because the table name,
-    * schema, and bucketing spec all survive the swap. Returns whether
-    * a rewrite happened, so maintenance jobs can log/skip cheaply —
-    * the no-op path costs one directory listing, zero Spark jobs.
-    * (A file format with file-level transactions could rewrite one
-    * bucket's files in place; plain parquet bucketed tables make the
-    * staging-swap the atomic option.) IvfIndexSpec pins compacted
-    * search ≡ rebuild search, the file-count collapse, and crash-heal.
-    *
-    * Swap order is crash-safe: the staging rewrite completes BEFORE
-    * any catalog mutation, then live→retired rename, staging→live
-    * rename, drop retired. The index data always exists under some
-    * name; the only no-table instant is between the two renames —
-    * catalog metadata moves, no data delete (the old order deleted
-    * the live table before the replacement was catalogued: a crash
-    * there lost the index). Every crash window heals at next entry:
-    * live missing + staging present can only mean the inter-rename
-    * window (staging is always complete), so staging is promoted;
-    * a staging or retired leftover NEXT TO a live table is stale and
-    * dropped. */
   /** IVF-INDEX DELETION — takedown maintenance for the vector store
     * (erasure requests, decontamination purges): the batch of vec_ids
-    * anti-joins away through the staged swap; the CENTROIDS — the
+    * anti-joins away through the staged swap
+    * ([[graft.sources.StandingTable.rewrite]]); the CENTROIDS — the
     * trained model — stay, so deletion commutes with append exactly:
     * append(B) then delete(B) restores the original index rows
     * bit-for-bit (IvfIndexSpec pins it), and post-delete search is
@@ -970,67 +927,28 @@ object Similarity {
     * the build-once stamp drops to "mutated". */
   def deleteFromIvfIndex(spark: SparkSession, name: String,
                          ids: DataFrame): Unit = {
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    healIvfSwap(spark, name)
-    val mode = if (assignModeOf(spark, name)) "twolevel" else "flat"
-    graft.sources.Readers.saveBucketedTable(
-      spark.table(name)
-        .join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti"),
-      staging, IndexFileBuckets, "bucket")
-    spark.sql(
-      s"ALTER TABLE $staging SET TBLPROPERTIES ('$AssignModeProp'='$mode')")
-    spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
-      s"('$FingerprintProp'='mutated')")
-    spark.sql(s"ALTER TABLE $name RENAME TO $retired")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    graft.sources.Readers.dropTableAndDir(spark, retired)
+    StandingTable.rewrite(spark, name, IndexFileBuckets, "bucket")(
+      _.join(broadcast(ids.select("vec_id")), Seq("vec_id"), "left_anti"))
     assignModeMemo.remove((spark, name))
   }
 
-  /** Shared crash-heal preamble for the staged-swap mutations
-    * (compaction, deletion) — the inter-rename window promotes
-    * staging; stale leftovers next to a live table drop. */
-  private def healIvfSwap(spark: SparkSession, name: String): Unit = {
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    if (!spark.catalog.tableExists(name) && spark.catalog.tableExists(staging))
-      spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    else if (spark.catalog.tableExists(staging))
-      graft.sources.Readers.dropTableAndDir(spark, staging)
-    if (spark.catalog.tableExists(retired))
-      graft.sources.Readers.dropTableAndDir(spark, retired)
-  }
-
+  /** COMPACTION — the maintenance half of the append story: every
+    * [[appendToIvfIndex]] batch adds a file set (up to one file per
+    * file-bucket per writing task), so daily appends at scale are a
+    * small-files explosion — each probed cell degrades into many tiny
+    * reads. When the file count passes `maxFilesPerBucket` per file
+    * bucket, the index is rewritten in one distributed, bucket-aligned
+    * pass through the staged swap
+    * ([[graft.sources.StandingTable.compact]]), leaving one file per
+    * occupied file bucket. Returns whether a rewrite happened.
+    * IvfIndexSpec pins compacted search ≡ rebuild search, the
+    * file-count bound, and crash-heal. */
   def compactIvfIndex(spark: SparkSession, name: String,
                       maxFilesPerBucket: Int = 2): Boolean = {
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    healIvfSwap(spark, name)
-    val nFiles = graft.sources.Readers.tableDataFiles(spark, name).size
-    if (nFiles <= IndexFileBuckets.toLong * maxFilesPerBucket) false
-    else {
-      graft.sources.Readers.saveBucketedTable(
-        spark.table(name), staging, IndexFileBuckets, "bucket")
-      // the staging table starts with no properties — carry the
-      // assignment-mode stamp over BEFORE the swap, or a compacted
-      // two-level index would silently read back as flat
-      val mode = if (assignModeOf(spark, name)) "twolevel" else "flat"
-      spark.sql(
-        s"ALTER TABLE $staging SET TBLPROPERTIES ('$AssignModeProp'='$mode')")
-      // compaction preserves contents — the build-once stamp survives
-      tableProp(spark, name, FingerprintProp).foreach(fp =>
-        spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
-          s"('$FingerprintProp'='$fp')"))
-      spark.sql(s"ALTER TABLE $name RENAME TO $retired")
-      spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-      graft.sources.Readers.dropTableAndDir(spark, retired)
-      // the swap preserves the mode, but invalidate the memo anyway —
-      // compaction is the one catalog mutation after build, so it owns
-      // the invalidation edge
-      assignModeMemo.remove((spark, name))
-      true
-    }
+    val rewrote = StandingTable.compact(spark, name, IndexFileBuckets,
+      "bucket", maxFilesPerBucket)
+    assignModeMemo.remove((spark, name))
+    rewrote
   }
 
   /** Search a built index: queries (a tiny slice) rank against the
@@ -1450,36 +1368,32 @@ object Similarity {
     * search must never re-derive a model from the corpus, or index
     * and corpus could silently disagree. */
   def buildPqIndex(spark: SparkSession, dir: String, name: String,
-                   numCentroids: Int): Unit = {
+                   numCentroids: Int): Unit =
     // build-once (the [[buildIvfIndex]] stamp): an unchanged corpus
     // re-enters search directly instead of re-encoding per query batch
-    val stamp = graft.core.ModelCache.fingerprint(
-      s"$dir/embeddings.parquet") + s"|pq|$numCentroids"
-    if (spark.catalog.tableExists(name) &&
-        spark.catalog.tableExists(s"${name}_centroids") &&
-        spark.catalog.tableExists(s"${name}_codebook") &&
-        tableProp(spark, name, FingerprintProp).contains(stamp)) return
-    val emb = Tables.embeddings(spark, dir)
-    val cent = centroidsOf(emb, numCentroids)
-    val cb = pqCodebookOf(emb)
-    // empty codebook ⇔ empty corpus: the assigned frame has no rows
-    // (empty quantizer), so any codes column satisfies the schema —
-    // but PqRecon's plan-build require must not fire
-    val codesCol =
-      if (cb.isEmpty) array().cast("array<int>")
-      else graft.functions.PqRecon.pqCodes(col("embedding"), cb, PqNumSub)
-    val rows = nearestCentroids(emb, cent, keep = 1)
-      .select(col("vec_id"), col("bucket"), codesCol.as("codes"))
-    graft.sources.Readers.saveBucketedTable(rows, name,
-      buckets = IndexFileBuckets, bucketCol = "bucket")
-    graft.sources.Readers.replaceTable(cent, s"${name}_centroids")
-    graft.sources.Readers.replaceTable(
-      emb.where(col("vec_id") < PqNumCodewords)
-        .select(col("vec_id").as("cb_id"), col("embedding").as("cb_vec")),
-      s"${name}_codebook")
-    spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-      s"('$FingerprintProp'='$stamp')")
-  }
+    StandingTable.buildOnce(spark, name,
+        graft.core.ModelCache.fingerprint(s"$dir/embeddings.parquet") +
+          s"|pq|$numCentroids",
+        Seq(s"${name}_centroids", s"${name}_codebook")) {
+      val emb = Tables.embeddings(spark, dir)
+      val cent = centroidsOf(emb, numCentroids)
+      val cb = pqCodebookOf(emb)
+      // empty codebook ⇔ empty corpus: the assigned frame has no rows
+      // (empty quantizer), so any codes column satisfies the schema —
+      // but PqRecon's plan-build require must not fire
+      val codesCol =
+        if (cb.isEmpty) array().cast("array<int>")
+        else graft.functions.PqRecon.pqCodes(col("embedding"), cb, PqNumSub)
+      val rows = nearestCentroids(emb, cent, keep = 1)
+        .select(col("vec_id"), col("bucket"), codesCol.as("codes"))
+      graft.sources.Readers.saveBucketedTable(rows, name,
+        buckets = IndexFileBuckets, bucketCol = "bucket")
+      graft.sources.Readers.replaceTable(cent, s"${name}_centroids")
+      graft.sources.Readers.replaceTable(
+        emb.where(col("vec_id") < PqNumCodewords)
+          .select(col("vec_id").as("cb_id"), col("embedding").as("cb_vec")),
+        s"${name}_codebook")
+    }
 
   /** Search a PQ index: probed cells pruned off the bucketed table,
     * codes decoded through the broadcast codebook (a builtin

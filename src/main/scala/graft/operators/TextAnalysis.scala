@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Text
+import graft.sources.StandingTable
 
 /** Text-analysis operators over `documents`: token statistics,
   * quality scoring, language-ID heuristic, fingerprinting, corpus
@@ -1455,11 +1456,6 @@ object TextAnalysis {
       .select(col("doc_id"),
         Text.roundPortable(col("score_raw"), 4).as("score"))
 
-  /** Every document's raw BM25 score against [[Bm25Query]] — the
-    * shared core of the bm25 gate and the hybrid fusion. */
-  private def bm25Scored(documents: DataFrame): DataFrame =
-    bm25ScoredWith(documents, bm25ModelOf(documents))
-
   /** The driver-held BM25 model: corpus size, average doc length,
     * per-query-term document frequency. */
   private[graft] case class Bm25Model(nDocs: Long, avgdl: Double,
@@ -1489,9 +1485,10 @@ object TextAnalysis {
     graft.core.ModelCache.corpusModel(spark, "bm25_stats",
       s"$dir/documents.parquet") { bm25ModelOf(Tables.documents(spark, dir)) }
 
-  /** Score every document against [[Bm25Query]] under a fitted model —
-    * one MAP-ONLY projection (idf as literals, tf from codegen'd
-    * array filters; terms summed in fixed query order). */
+  /** Every document's raw BM25 score against [[Bm25Query]] under a
+    * fitted model — the shared core of the bm25 gate and the hybrid
+    * fusion: one MAP-ONLY projection (idf as literals, tf from
+    * codegen'd array filters; terms summed in fixed query order). */
   private def bm25ScoredWith(documents: DataFrame, m: Bm25Model): DataFrame = {
     val docs = documents
       .select(col("doc_id"), toks.as("toks"))
@@ -1605,33 +1602,29 @@ object TextAnalysis {
     * contract), plus a one-row stats table (N, avgdl — the same
     * definition [[bm25ModelOf]] fits, so indexed and scan scores are
     * bit-identical). Build-once with the corpus-fingerprint stamp
-    * ([[graft.operators.Similarity]]'s convention): an unchanged
-    * corpus re-enters search directly. */
-  def buildTextIndex(spark: SparkSession, dir: String, name: String): Unit = {
-    val stamp = graft.core.ModelCache.fingerprint(
-      s"$dir/documents.parquet") + "|bm25idx"
-    if (spark.catalog.tableExists(name) &&
-        spark.catalog.tableExists(s"${name}_stats") &&
-        graft.sources.Readers.tableProp(spark, name, "graft.fingerprint")
-          .contains(stamp)) return
-    val docs = Tables.documents(spark, dir)
-      .select(col("doc_id"), toks.as("toks"))
-      .withColumn("dl", size(col("toks")).cast("double"))
-    graft.sources.Readers.saveBucketedTable(postingRowsOf(docs), name,
-      TextIndexBuckets, "term")
-    // stats persist as (n, sum_dl), NOT (n, avgdl): doc lengths are
-    // integer-valued doubles, so their sums are EXACT (up to 2^53
-    // tokens — orders beyond a 100 TB corpus) and COMPOSE under
-    // append — n and sum add; an avg would drift in its last ulp and
-    // break append ≡ rebuild bit-parity. avgdl = sum_dl/n at search
-    // equals the model path's avg(dl) exactly for the same reason.
-    graft.sources.Readers.replaceTable(
-      docs.agg(count(lit(1)).as("n"),
-        coalesce(sum("dl"), lit(0.0)).as("sum_dl")),
-      s"${name}_stats")
-    spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-      s"('graft.fingerprint'='$stamp')")
-  }
+    * ([[graft.sources.StandingTable]]): an unchanged corpus re-enters
+    * search directly. */
+  def buildTextIndex(spark: SparkSession, dir: String, name: String): Unit =
+    StandingTable.buildOnce(spark, name,
+        graft.core.ModelCache.fingerprint(s"$dir/documents.parquet") +
+          "|bm25idx",
+        Seq(s"${name}_stats")) {
+      val docs = Tables.documents(spark, dir)
+        .select(col("doc_id"), toks.as("toks"))
+        .withColumn("dl", size(col("toks")).cast("double"))
+      graft.sources.Readers.saveBucketedTable(postingRowsOf(docs), name,
+        TextIndexBuckets, "term")
+      // stats persist as (n, sum_dl), NOT (n, avgdl): doc lengths are
+      // integer-valued doubles, so their sums are EXACT (up to 2^53
+      // tokens — orders beyond a 100 TB corpus) and COMPOSE under
+      // append — n and sum add; an avg would drift in its last ulp and
+      // break append ≡ rebuild bit-parity. avgdl = sum_dl/n at search
+      // equals the model path's avg(dl) exactly for the same reason.
+      graft.sources.Readers.replaceTable(
+        docs.agg(count(lit(1)).as("n"),
+          coalesce(sum("dl"), lit(0.0)).as("sum_dl")),
+        s"${name}_stats")
+    }
 
   /** Posting rows of a (doc_id, toks, dl) frame — shared by build and
     * append so an appended doc's rows are exactly a rebuild's. */
@@ -1640,12 +1633,27 @@ object TextAnalysis {
       .groupBy("term", "doc_id", "dl")
       .agg(count(lit(1)).cast("double").as("tf"))
 
+  /** Add (`sign` = 1) or subtract (`sign` = -1) a (doc_id, toks, dl)
+    * batch's document count and length sum to the index's stats row —
+    * ALGEBRAICALLY, no corpus re-read: counts and exact integer-double
+    * sums compose, so the row stays bit-identical to a rebuild's. */
+  private def shiftStats(spark: SparkSession, name: String,
+                         docs: DataFrame, sign: Int): Unit = {
+    val b = docs.agg(count(lit(1)).as("n"),
+      coalesce(sum("dl"), lit(0.0)).as("sum_dl")).head
+    val old = spark.table(s"${name}_stats").head
+    import spark.implicits._
+    graft.sources.Readers.replaceTable(
+      Seq((old.getLong(0) + sign * b.getLong(0),
+        old.getDouble(1) + sign * b.getDouble(1))).toDF("n", "sum_dl"),
+      s"${name}_stats")
+  }
+
   /** INCREMENTAL posting-index maintenance — the text twin of
     * [[graft.operators.Similarity.appendToIvfIndex]]: a batch of new
     * documents appends its posting rows (one batch-sized pass; the
     * standing postings are untouched) and the stats row updates
-    * ALGEBRAICALLY (counts and exact integer-double sums add — no
-    * corpus re-read). The build-once stamp is overwritten: an
+    * algebraically. The build-once stamp drops to "appended": an
     * appended index no longer equals a fresh dir build. */
   def appendToTextIndex(spark: SparkSession, name: String,
                         batch: DataFrame): Unit = {
@@ -1655,16 +1663,8 @@ object TextAnalysis {
     postingRowsOf(docs)
       .write.bucketBy(TextIndexBuckets, "term").sortBy("term")
       .mode(org.apache.spark.sql.SaveMode.Append).saveAsTable(name)
-    val b = docs.agg(count(lit(1)).as("n"),
-      coalesce(sum("dl"), lit(0.0)).as("sum_dl")).head
-    val old = spark.table(s"${name}_stats").head
-    import spark.implicits._
-    graft.sources.Readers.replaceTable(
-      Seq((old.getLong(0) + b.getLong(0),
-        old.getDouble(1) + b.getDouble(1))).toDF("n", "sum_dl"),
-      s"${name}_stats")
-    spark.sql(s"ALTER TABLE $name SET TBLPROPERTIES " +
-      s"('graft.fingerprint'='appended')")
+    shiftStats(spark, name, docs, 1)
+    StandingTable.markAppended(spark, name)
   }
 
   /** POSTING-INDEX DELETION — the takedown half of the maintenance
@@ -1673,10 +1673,11 @@ object TextAnalysis {
     * [[appendToTextIndex]] symmetry — stats must subtract EXACTLY
     * what append added, so the same tokenization computes the same
     * integer-double sums), posting rows anti-join away in ONE
-    * distributed pass through the compaction staging swap, and the
-    * stats row decrements algebraically. Delete ≡ rebuild holds
-    * BIT-FOR-BIT — including scores: BM25's df is recomputed from the
-    * index at search time, so removed docs stop counting everywhere
+    * distributed pass through the staged swap
+    * ([[graft.sources.StandingTable.rewrite]]), and the stats row
+    * decrements algebraically. Delete ≡ rebuild holds BIT-FOR-BIT —
+    * including scores: BM25's df is recomputed from the index at
+    * search time, so removed docs stop counting everywhere
     * (TextIndexSpec pins stats and search parity against a fresh
     * build on the surviving docs). The build-once stamp drops to
     * "mutated": a deleted index no longer equals a fresh dir build. */
@@ -1685,42 +1686,9 @@ object TextAnalysis {
     val docs = batch
       .select(col("doc_id"), toks.as("toks"))
       .withColumn("dl", size(col("toks")).cast("double"))
-    val ids = docs.select("doc_id")
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    healStagedSwap(spark, name)
-    graft.sources.Readers.saveBucketedTable(
-      spark.table(name).join(broadcast(ids), Seq("doc_id"), "left_anti"),
-      staging, TextIndexBuckets, "term")
-    spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
-      s"('graft.fingerprint'='mutated')")
-    spark.sql(s"ALTER TABLE $name RENAME TO $retired")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    graft.sources.Readers.dropTableAndDir(spark, retired)
-    val b = docs.agg(count(lit(1)).as("n"),
-      coalesce(sum("dl"), lit(0.0)).as("sum_dl")).head
-    val old = spark.table(s"${name}_stats").head
-    import spark.implicits._
-    graft.sources.Readers.replaceTable(
-      Seq((old.getLong(0) - b.getLong(0),
-        old.getDouble(1) - b.getDouble(1))).toDF("n", "sum_dl"),
-      s"${name}_stats")
-  }
-
-  /** Crash-heal preamble shared by every staged-swap mutation of a
-    * posting index: a live-missing/staging-present state can only be
-    * the inter-rename window (staging is always complete before any
-    * catalog mutation), so staging promotes; stale staging/retired
-    * leftovers NEXT TO a live table drop. */
-  private def healStagedSwap(spark: SparkSession, name: String): Unit = {
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    if (!spark.catalog.tableExists(name) && spark.catalog.tableExists(staging))
-      spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-    else if (spark.catalog.tableExists(staging))
-      graft.sources.Readers.dropTableAndDir(spark, staging)
-    if (spark.catalog.tableExists(retired))
-      graft.sources.Readers.dropTableAndDir(spark, retired)
+    StandingTable.rewrite(spark, name, TextIndexBuckets, "term")(
+      _.join(broadcast(docs.select("doc_id")), Seq("doc_id"), "left_anti"))
+    shiftStats(spark, name, docs, -1)
   }
 
   /** POSTING-INDEX COMPACTION — the maintenance half of
@@ -1729,60 +1697,17 @@ object TextAnalysis {
     * batch adds a file set (up to one file per term bucket per
     * writing task), so a streaming ingest fragments each term bucket
     * into many tiny reads. When the file count passes
-    * `maxFilesPerBucket` per bucket, rewrite the postings in ONE
-    * distributed pass into a staging table (same term bucketing) and
-    * swap via catalog renames — rows never touch the driver; search
-    * plans (term-bucket pruning included) are unchanged because name,
-    * schema, and bucketing spec survive. The stats row is untouched:
-    * compaction moves files, not content. Crash-safe swap order (the
-    * IVF lesson verbatim): staging completes before any catalog
-    * mutation; live missing + staging present can only be the
-    * inter-rename window, so staging is promoted at next entry;
-    * stale staging/retired leftovers next to a live table drop.
-    * Returns whether a rewrite happened — the no-op path costs one
-    * directory listing, zero Spark jobs. TextIndexSpec pins compacted
-    * ≡ uncompacted search bit-parity, the file-count collapse, the
-    * stamp carry, and pruning still firing. */
+    * `maxFilesPerBucket` per bucket, the postings are rewritten in one
+    * bucket-aligned pass through the staged swap
+    * ([[graft.sources.StandingTable.compact]]), one file per occupied
+    * term bucket. The stats row is untouched: compaction moves files,
+    * not content. Returns whether a rewrite happened. TextIndexSpec
+    * pins compacted ≡ uncompacted search bit-parity, the file-count
+    * bound, the stamp carry, and pruning still firing. */
   def compactTextIndex(spark: SparkSession, name: String,
-                       maxFilesPerBucket: Int = 2): Boolean = {
-    val staging = s"${name}_compacting"
-    val retired = s"${name}_retired"
-    healStagedSwap(spark, name)
-    val nFiles = graft.sources.Readers.tableDataFiles(spark, name).size
-    if (nFiles <= TextIndexBuckets.toLong * maxFilesPerBucket) false
-    else {
-      // the rewrite must read BUCKET-ALIGNED so each task holds
-      // exactly one bucket and writes exactly one file. Left alone,
-      // the planner defeats this twice over: an explicit
-      // repartition(buckets, term) is elided as redundant (the
-      // relation's bucket spec already claims that partitioning),
-      // and autoBucketedScan then DISABLES the bucketed read because
-      // no operator requires the distribution — leaving input-split
-      // tasks that each spray a file into every bucket they touch
-      // (measured: a 144-file index "compacted" to 85). Pinning the
-      // bucketed scan for this one query gives the ideal compaction
-      // plan: zero shuffle, |buckets| tasks, one file per bucket.
-      val autoScan = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.getOption(autoScan)
-      spark.conf.set(autoScan, "false")
-      try
-        graft.sources.Readers.saveBucketedTable(
-          spark.table(name), staging, TextIndexBuckets, "term")
-      finally prev match {
-        case Some(v) => spark.conf.set(autoScan, v)
-        case None    => spark.conf.unset(autoScan)
-      }
-      // compaction preserves contents — whatever fingerprint state
-      // the live table carries ("appended" included) survives the swap
-      graft.sources.Readers.tableProp(spark, name, "graft.fingerprint")
-        .foreach(fp => spark.sql(s"ALTER TABLE $staging SET TBLPROPERTIES " +
-          s"('graft.fingerprint'='$fp')"))
-      spark.sql(s"ALTER TABLE $name RENAME TO $retired")
-      spark.sql(s"ALTER TABLE $staging RENAME TO $name")
-      graft.sources.Readers.dropTableAndDir(spark, retired)
-      true
-    }
-  }
+                       maxFilesPerBucket: Int = 2): Boolean =
+    StandingTable.compact(spark, name, TextIndexBuckets, "term",
+      maxFilesPerBucket)
 
   /** Search the posting index for a query batch: the scan is PRUNED
     * to the buckets holding the batch's terms; per-term document

@@ -73,28 +73,15 @@ object Readers {
     (good, bad)
   }
 
-  /** Catalog table write+read (reference: saveAsTable("top3_sales"),
-    * RowNumberWindowFunction.java:54-56). */
-  def saveTable(df: DataFrame, name: String): Unit =
-    df.write.mode("overwrite").saveAsTable(name)
-
-  /** Overwrite-safe plain table write: the in-memory catalog forgets
-    * tables between JVMs but their warehouse directories persist, so
-    * a bare overwrite can trip over a stale dir the catalog doesn't
-    * own. Drop both, then write. */
+  /** Overwrite-safe catalog table write (reference:
+    * saveAsTable("top3_sales"), RowNumberWindowFunction.java:54-56):
+    * the in-memory catalog forgets tables between JVMs but their
+    * warehouse directories persist, so a bare overwrite can trip over
+    * a stale dir the catalog doesn't own. Drop both, then write. */
   def replaceTable(df: DataFrame, name: String): Unit = {
     dropTableAndDir(df.sparkSession, name)
     df.write.mode("overwrite").saveAsTable(name)
   }
-
-  /** One table property, or None when the table does not carry it
-    * (`SHOW TBLPROPERTIES t('k')` answers a missing key with a
-    * "does not have property" message row rather than no rows). */
-  def tableProp(spark: org.apache.spark.sql.SparkSession, name: String,
-                key: String): Option[String] =
-    spark.sql(s"SHOW TBLPROPERTIES $name('$key')")
-      .collect().headOption.map(_.getString(1))
-      .filterNot(_.contains("does not have property"))
 
   /** Bucketed-and-sorted catalog write — the co-location contract
     * behind both the no-shuffle fact joins (BucketingSpec) and the
@@ -172,7 +159,4 @@ object Readers {
     }
     if (loc.exists()) rm(loc)
   }
-
-  def table(spark: SparkSession, name: String): DataFrame =
-    spark.table(name)
 }
