@@ -48,21 +48,6 @@ object Bench {
     }
     val spark = LocalSession()
 
-    // r15 (verdict "What's wrong" #1): the fingerprint-keyed dedup
-    // cluster tables let derivation done OUTSIDE the timed region —
-    // the untimed warmup pass below, or with a persistent metastore a
-    // previous session — subsidize q_delete_propagate/dedup_keep_best.
-    // Drop them at start AND after warmup so the timed region pays
-    // first-use derivation itself. The *_index* tables stay: the
-    // queries reading them are NAMED serve-time gates (sim_ivf_indexed,
-    // text_bm25_indexed) and their build is timed by the non-indexed
-    // twins.
-    def dropClusterTables(): Unit =
-      spark.catalog.listTables().collect()
-        .filter(_.name.startsWith("dedup_clusters_"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
-    dropClusterTables()
-
     selected.foreach { case (_, fn) =>
       try fn(spark, sfDir).count()
       catch { case e: Throwable =>
@@ -70,12 +55,22 @@ object Bench {
       }
       spark.catalog.clearCache()
     }
-    // drop again so the TIMED region pays the (session, corpus)
-    // first-use build: dedup_keep_best's rep 1 derives the table
-    // (visible as a rep-1 spike in BENCH_DETAIL), later consumers in
-    // the same run read the standing artifact — the serve-time story,
-    // but with the derivation paid inside the measured run.
-    dropClusterTables()
+    // The fingerprint-keyed dedup cluster tables let derivation done
+    // OUTSIDE the timed region — the untimed warmup pass above —
+    // subsidize q_delete_propagate/dedup_keep_best. The warehouse is
+    // fresh per run (LocalSession), so these are exactly the tables
+    // the warmup built; dropping them makes the TIMED region pay the
+    // (session, corpus) first-use build: dedup_keep_best's rep 1
+    // derives the table (visible as a rep-1 spike in BENCH_DETAIL),
+    // later consumers in the same run read the standing artifact —
+    // the serve-time story, but with the derivation paid inside the
+    // measured run. The *_index* tables stay: the queries reading
+    // them are NAMED serve-time gates (sim_ivf_indexed,
+    // text_bm25_indexed) and their build is timed by the non-indexed
+    // twins.
+    spark.catalog.listTables().collect()
+      .filter(_.name.startsWith("dedup_clusters_"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
 
     val results: Seq[(String, QueryResult)] = selected.toSeq.map {
       case (name, fn) =>

@@ -2,8 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType, StructType}
 
@@ -26,6 +28,14 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType,
   * filter), so equality with the HOF twin is element-wise identity.
   * Interval fields are read positionally (s = field 0, e = field 1)
   * exactly as the struct is built at the call site.
+  *
+  * Nulls follow the twin's three-valued logic: `filter` drops a token
+  * whose predicate is null as well as false, and `exists` is null
+  * when no interval surely covers the position but one might. So a
+  * null `s` reads as −∞, a null `e` as +∞, a null interval as
+  * covering everything, and a null interval LIST drops every token;
+  * a null token is kept (as null) like any other; only a null token
+  * array yields null.
   */
 case class RemoveIntervalsExpr(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -51,13 +61,28 @@ case class RemoveIntervalsExpr(left: Expression, right: Expression)
         s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
   }
 
-  override def nullSafeEval(toks: Any, ivs: Any): Any =
-    RemoveIntervals.compute(toks.asInstanceOf[ArrayData],
-      ivs.asInstanceOf[ArrayData])
+  override def nullable: Boolean = left.nullable
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"${RemoveIntervals.getClass.getName.stripSuffix("$")}.compute($a, $b)")
+  override def eval(input: InternalRow): Any = {
+    val toks = left.eval(input)
+    if (toks == null) null
+    else RemoveIntervals.compute(toks.asInstanceOf[ArrayData],
+      right.eval(input).asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val toks = left.genCode(ctx)
+    val ivs = right.genCode(ctx)
+    val kernel = RemoveIntervals.getClass.getName.stripSuffix("$")
+    ev.copy(code = code"""
+      ${toks.code}
+      boolean ${ev.isNull} = ${toks.isNull};
+      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+      if (!${ev.isNull}) {
+        ${ivs.code}
+        ${ev.value} = $kernel.compute(${toks.value}, ${ivs.isNull} ? null : ${ivs.value});
+      }""")
+  }
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -71,9 +96,12 @@ object RemoveIntervals {
     * intervals merge (integer positions make [1,3]+[4,6] ≡ [1,6]),
     * then one forward sweep keeps every token whose position falls in
     * a gap. The sweep never goes backward because merged intervals
-    * are strictly increasing and positions are scanned in order. */
+    * are strictly increasing and positions are scanned in order. A
+    * null `ivs` (the whole list unknown) keeps no token; null bounds
+    * and null intervals are unbounded (see the expression's doc). */
   def compute(toks: ArrayData, ivs: ArrayData): ArrayData = {
     val n = toks.numElements()
+    if (ivs == null) return new GenericArrayData(Array.empty[AnyRef])
     val m = ivs.numElements()
     if (m == 0 || n == 0) return toks.copy()
     // extract + sort by start
@@ -82,9 +110,9 @@ object RemoveIntervals {
     val idx = new Array[Integer](m)
     var i = 0
     while (i < m) {
-      val row = ivs.getStruct(i, 2)
-      ss(i) = row.getInt(0)
-      es(i) = row.getInt(1)
+      val row = if (ivs.isNullAt(i)) null else ivs.getStruct(i, 2)
+      ss(i) = if (row == null || row.isNullAt(0)) Int.MinValue else row.getInt(0)
+      es(i) = if (row == null || row.isNullAt(1)) Int.MaxValue else row.getInt(1)
       idx(i) = i
       i += 1
     }
@@ -97,7 +125,7 @@ object RemoveIntervals {
     i = 0
     while (i < m) {
       val s = ss(idx(i)); val e = es(idx(i))
-      if (k >= 0 && s <= me(k) + 1) { if (e > me(k)) me(k) = e }
+      if (k >= 0 && s.toLong <= me(k).toLong + 1) { if (e > me(k)) me(k) = e }
       else { k += 1; ms(k) = s; me(k) = e }
       i += 1
     }
@@ -113,7 +141,10 @@ object RemoveIntervals {
       while (cur < nMerged && me(cur) < p) cur += 1
       val removed = cur < nMerged && p >= ms(cur)
       // clone: the view points into a reusable row buffer
-      if (!removed) { out(kept) = toks.getUTF8String(i).clone(); kept += 1 }
+      if (!removed) {
+        out(kept) = if (toks.isNullAt(i)) null else toks.getUTF8String(i).clone()
+        kept += 1
+      }
       i += 1
     }
     if (kept == n) toks.copy()

@@ -299,9 +299,10 @@ object Dedup {
   private val ContainmentThreshold = 0.9
 
   /** Distinct candidate pairs of the containment prefix filter —
-    * the seam ScaleProbe counts to price the size predicate.
-    * `sizePrune=false` is the r11 shape (prefix × full posting list
-    * unguarded), kept ONLY for that measurement. */
+    * the seam ScalingSpec counts to pin its growth. `sizePrune=false`
+    * is the r11 shape (prefix × full posting list unguarded), the
+    * reference of ContainmentDedupSpec's "the size predicate prunes
+    * candidates but never a pair that verifies". */
   private[graft] def containmentCandidates(docs: DataFrame,
       sizePrune: Boolean = true): DataFrame = {
     // ns (= |shingles(doc)|) is computed map-only at the scan and rides
@@ -324,8 +325,8 @@ object Dedup {
       .where(col("rnk") <= col("ns") - ceil(lit(t) * col("ns")) + 1)
       .select("doc_id", "ns", "sh", "rnk")
     if (!sizePrune)
-      // r11 measurement seam, unchanged: prefix × full posting list,
-      // no size predicate (ScaleProbe prices exactly this shape)
+      // r11 shape, unchanged: prefix × full posting list, no size
+      // predicate (ContainmentDedupSpec's lossless-pruning reference)
       prefix.as("a")
         .join(sh.as("b"),
           col("a.sh") === col("b.sh") && col("a.doc_id") =!= col("b.doc_id"))
@@ -404,11 +405,12 @@ object Dedup {
   }
 
   /** Corpus size above which the default simhash banding widens from
-    * 16-bit to 24-bit bands. SCALING.md's measurement locates the
-    * crossover: at ~10⁵+ docs the 16-bit buckets' birthday-collision
-    * candidates (~n²/16⁴ per band) overtake the recall benefit, while
-    * 24-bit bands shrink candidates ~256× per band for a few points
-    * of recall at the same hamming threshold. */
+    * 16-bit to 24-bit bands. The round-7 measurement
+    * (`git show ab6c630:SCALING.md`) locates the crossover: at ~10⁵+
+    * docs the 16-bit buckets' birthday-collision candidates (~n²/16⁴
+    * per band) overtake the recall benefit, while 24-bit bands shrink
+    * candidates ~256× per band for a few points of recall at the same
+    * hamming threshold. */
   private[operators] val SimhashWideBandDocs = 100000L
 
   /** The banding the default config uses for a corpus of n docs —
@@ -447,11 +449,12 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
 
   /** SimHash candidate+verify core with the banding exposed as the
-    * recall/cost dial (measured in SCALING.md): `bandHexLen` hex
-    * chars per band (×4 bits), overlapping bands every `stride` hex
-    * chars across the 16-hex signature. 8-bit disjoint bands give
-    * 100% recall at hamming ≤ 7 but 256-value buckets whose candidate
-    * pairs grow quadratically with the corpus; the default 7
+    * recall/cost dial (measured in rounds 6–7,
+    * `git show ab6c630:SCALING.md`): `bandHexLen` hex chars per band
+    * (×4 bits), overlapping bands every `stride` hex chars across the
+    * 16-hex signature. 8-bit disjoint bands give 100% recall at
+    * hamming ≤ 7 but 256-value buckets whose candidate pairs grow
+    * quadratically with the corpus; the default 7
     * overlapping 16-bit bands keep ~86–92% recall with ~200× fewer
     * candidates. Candidates in a band bucket still grow ~n²/16^len by
     * birthday collision, so band bits should grow with log₂(n) — at

@@ -130,8 +130,9 @@ object ParamFilters {
 
   /** The RECOMMENDED-default skew plan: the same join/agg as
     * [[qSkewJoinSalted]] but unsalted, leaving skew to AQE's runtime
-    * split. SCALING.md's salt-vs-AQE probe shows this is the plan to
-    * reach for first on Spark 4 (the ×8 dim replication rarely earns
+    * split. The round-7 salt-vs-AQE probe
+    * (`git show ab6c630:SCALING.md`) shows this is the plan to reach
+    * for first on Spark 4 (the ×8 dim replication rarely earns
     * its complexity); gated with the identical oracle so the default,
     * not just the legacy idiom, is hash-checked. */
   def qSkewJoinPlainAqe(spark: SparkSession, dir: String): DataFrame = {

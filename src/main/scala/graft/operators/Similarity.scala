@@ -198,9 +198,9 @@ object Similarity {
     * denominator is the realized exact list, < k only on degenerate
     * corpora). The operator exists because recall is a FIRST-CLASS
     * pipeline artifact — the number that decides nprobe/centroid
-    * dials — not a test-only concern; the spec-level recall probes
-    * (ScaleProbe's [recall] tables) measure the same thing offline,
-    * this gates it as a query.
+    * dials — not a test-only concern; the spec-level recall bounds
+    * (IvfRecallSpec) measure the same thing offline, this gates it as
+    * a query.
     *
     * Scale shape: both sides are |queries|·k rows after their own
     * top-k pruning — the join and per-query count are panel-sized.
@@ -319,7 +319,7 @@ object Similarity {
     * nProbes·√n instead of the fixed config's n/8 — per-query work
     * SHRINKS relative to the corpus as it grows, which is what makes
     * top-k search usable at 100 TB. nprobe=2 is the recall dial
-    * (measured against brute force in SCALING.md), mirroring the
+    * (pinned against brute force in IvfRecallSpec), mirroring the
     * dedup side. */
   def qSimIvfScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
@@ -434,7 +434,8 @@ object Similarity {
     * cluster gates omit unpaired docs.
     *
     * k is the CLEANLINESS dial (measured over planted near-copy
-    * groups, SCALING.md round-11 k-sweep): completeness — true copies
+    * groups in the round-11 k-sweep, `git show ab6c630:SCALING.md`;
+    * MutualKnnQualitySpec pins both ends): completeness — true copies
     * co-clustering — is 0.93–0.98 at every k, but every neighbor slot
     * beyond the expected duplicate-group size admits background
     * mutual edges whose components chain: at k = group−1 planted
@@ -461,8 +462,8 @@ object Similarity {
   }
 
   /** [[qSimMutualKnnClusters]]'s core over an arbitrary embedding
-    * frame (private[graft]: ScaleProbe runs it over planted corpora
-    * to measure cluster purity/completeness). */
+    * frame (private[graft]: MutualKnnQualitySpec runs it over planted
+    * corpora to measure cluster purity/completeness). */
   private[graft] def mutualKnnClusters(emb: DataFrame, numCentroids: Int,
                                        nProbes: Int, k: Int,
                                        forceDistributed: Boolean = false): DataFrame = {
@@ -631,7 +632,7 @@ object Similarity {
   private val NumProbes = 2
 
   /** Exact all-pairs near-dup — the small-corpus oracle baseline
-    * (private[graft]: ScaleProbe uses it as recall ground truth). */
+    * (private[graft]: IvfRecallSpec uses it as recall ground truth). */
   private[graft] def allPairsNearDup(emb: DataFrame): DataFrame = {
     val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("v_a"))
     val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("v_b"))
@@ -646,7 +647,7 @@ object Similarity {
     * only corpus-wide shuffle), and candidates alone get the exact
     * cosine verify. Same candidate-generation/verify split as the
     * LSH text dedups. Recall is the IVF trade (multi-probe is the
-    * dial; measured in SCALING.md) — the all-pairs formulation is
+    * dial; pinned in IvfRecallSpec) — the all-pairs formulation is
     * the exact-recall alternative, legal only under
     * [[AllPairsMaxVectors]]. */
   private[graft] def blockedNearDup(emb: DataFrame, numCentroids: Int,
@@ -704,7 +705,7 @@ object Similarity {
     * plan runs zero Spark jobs (the round-5 fix qDedupEmbedding got;
     * an emb.count() here cost a full scan per invocation). `nProbes`
     * is the recall/cost dial (each vector lands in its nProbes nearest
-    * buckets; recall-vs-nprobe measured in SCALING.md), mirroring the
+    * buckets; recall-vs-nprobe pinned in IvfRecallSpec), mirroring the
     * simhash banding dial. Approximate by construction; the
     * fixed-config variant is hash-gated as dedup_embedding_blocked,
     * this √n config as dedup_embedding_scaled. */
@@ -1032,8 +1033,8 @@ object Similarity {
   // bucketing must be computable independently by writers that share
   // nothing but the plane seed. The price: buckets are not adapted
   // to the data distribution, so recall per probed candidate is
-  // below a trained IVF's (measured against brute force in
-  // SCALING.md, like the IVF probes).
+  // below a trained IVF's (pinned against brute force in
+  // LshSearchSpec, like the IVF paths in IvfRecallSpec).
   //
   // Scale shape: signature computation is MAP-ONLY (literal
   // Rademacher planes — the emb_project_rp convention — folded in a
@@ -1072,8 +1073,8 @@ object Similarity {
     * independent bands suffices ⇒ recall ≈ 1 − (1−P)^B. The r11
     * measurements validate the model at both regimes: it predicts
     * 0.92 at 8 bits (measured 94 %) and 0.22 at 16 bits (measured
-    * 14 %) for the fixture's ~0.5-cosine top-k — the collapse
-    * SCALING.md's [lsh] table priced. */
+    * 14 %) for the fixture's ~0.5-cosine top-k — the collapse the
+    * round-11 [lsh] table priced (`git show ab6c630:SCALING.md`). */
   private[graft] def lshSearchRecallEstimate(bits: Int, flips: Int,
                                              sim: Double): Double = {
     val p = srpPlaneAgreement(sim)
@@ -1243,7 +1244,7 @@ object Similarity {
     * vector, so append-heavy / multi-writer corpora can band
     * independently sharing nothing but the plane seed.
     *
-    * The regime contract (measured, SCALING.md): at the TIGHT
+    * The regime contract (pinned in LshSearchSpec): at the TIGHT
     * similarities dedup actually hunts (copies/re-encodes, cosine
     * ≥0.9, per-plane agreement ≥0.9) banding recalls ~100 % of
     * planted pairs at a ~10⁻³ candidate fraction even in the 16-bit
@@ -1315,7 +1316,7 @@ object Similarity {
     * (1 + bits + C(bits,2) probe values per query band — 37 at 8
     * bits, 137 at 16) measured at the fixture's near-orthogonal
     * worst case: recall@5 0.06 → 0.86 over exact probing
-    * (SCALING.md). Query-side only — corpus cost is unchanged. */
+    * (LshSearchSpec). Query-side only — corpus cost is unchanged. */
   private val LshFlips = 2
 
   /** The SCALE config: bits per band from footer metadata plus
@@ -1325,8 +1326,9 @@ object Similarity {
     * ([[lshSearchBitsFor]] — zero jobs at plan build): the corpus-size
     * rule capped by the target-similarity recall model, so the 40×
     * regime that used to step to 16 bits and collapse to 14 % recall
-    * (SCALING.md r11) now stays at the recall-holding width. At
-    * fixture sizes both rules floor at the fixed gate's 8. */
+    * (round 11, `git show ab6c630:SCALING.md`) now stays at the
+    * recall-holding width. At fixture sizes both rules floor at the
+    * fixed gate's 8. */
   def qSimLshCosineScaled(spark: SparkSession, dir: String): DataFrame = {
     val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
     lshSearch(Tables.embeddings(spark, dir), lshSearchBitsFor(n), LshFlips)

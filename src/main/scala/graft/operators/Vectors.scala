@@ -20,7 +20,8 @@ object Vectors {
   /** L2-normalized copy given a PRE-BOUND norm column — the lambda
     * reads an O(1) reference. An inline `l2Norm(v)` captured in the
     * lambda would be re-evaluated per ELEMENT (O(d²) per row; the
-    * SQ8 recon paid 4.8× for the same mistake — SCALING.md). */
+    * SQ8 recon paid 4.8× for the same mistake — round 7,
+    * `git show ab6c630:SCALING.md`). */
   def l2Normalize(v: Column, n: Column): Column =
     transform(v, x => when(n === 0.0, 0.0).otherwise(x / n))
 

@@ -2,908 +2,152 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{SparkEntry, Tables}
+import graft.{Profile, SparkEntry, Tables}
 
-/** Scaling harness: replicates the sf0.1 fixtures ×N with key offsets
-  * (texts perturbed per replica so near-dup structure doesn't collapse
-  * into cross-replica exact duplicates), then times representative
-  * queries at 1× and N×. Evidence that the plans scale linearly-ish
-  * in rows rather than quadratically — the local stand-in for the
-  * 100 TB question. Results → SCALING.md.
+/** Counter-based scaling check: replicates the fixtures ×N with key
+  * offsets (texts and vectors perturbed per replica so near-dup
+  * structure doesn't collapse into cross-replica exact duplicates),
+  * runs each query once at 1× and once at N× through [[graft.Profile]]
+  * and prints one markdown row per query. The verdict is the growth of
+  * the summed operator output rows, log(ratio)/log(N): row counts are
+  * exact on any host, where a wall-time ratio on a shared machine is
+  * not. This is the local stand-in for the question "does this plan
+  * scale?".
   *
   *   sbt "runMain graft.tools.ScaleProbe [N] [name,name,...]"
-  * (the optional second arg restricts the probe to the named queries —
-  * re-probing one operator shouldn't cost the full sweep; the
-  * pseudo-names "recall" and "plant" select the IVF recall tables)
+  *
+  * N defaults to 4; the names default to every `SparkEntry.queries`
+  * entry. The 1× fixtures are sf0.1, the bench's scale; replicas are
+  * written to a fresh temp directory, deleted at exit. Only the result frame's plan is
+  * walked: a `stream_*` row's per-batch plans run inside
+  * `foreachBatch`, and a query that iterates on the driver returns a
+  * local relation, so those rows show little more than their output.
   */
 object ScaleProbe {
-  def main(args: Array[String]): Unit = {
-    val factor = args.headOption.map(_.toInt).getOrElse(10)
-    val only: Option[Set[String]] = args.lift(1).map(_.split(',').toSet)
-    val src = "/root/testdata/sf0.1"
-    val dst = s"/tmp/graft_sfbig_x$factor"
-    val spark = graft.LocalSession()
-    // events.ts is INT64 nanos — read as long (replicas then store long)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-    // optional arg 3: replicate ONLY these tables (a 100× run of
-    // document-family probes shouldn't pay a 100× lineitem build)
-    val onlyTables: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
-    def replicate(name: String, transform: (DataFrame, Int) => DataFrame): Unit = {
-      if (onlyTables.exists(!_.contains(name))) return
-      val out = s"$dst/$name.parquet"
-      if (!new java.io.File(out).exists()) {
-        val base = Tables.load(spark, src, name)
-        val big = (0 until factor).map(i => transform(base, i)).reduce(_ union _)
-        big.write.mode(SaveMode.Overwrite).parquet(out)
-      }
+  /** Growth exponents above this are super-linear: 4^1.25 ≈ 5.7× the
+    * rows for 4× the data, where linear work gives 4× and a pair join
+    * over fixed blocks gives 16×. */
+  val SuperLinear = 1.25
+
+  /** log(big/base)/log(factor): 0 for fixed-size work, 1 for
+    * row-linear work, 2 for all-pairs. */
+  def exponent(base: Long, big: Long, factor: Int): Double =
+    if (big == base) 0.0
+    else math.log(big.toDouble / base) / math.log(factor.toDouble)
+
+  def growthClass(e: Double): String =
+    if (e > SuperLinear) "super-linear" else "linear"
+
+  private val Key = 100000000L
+
+  /** Writes every fixture table of `src` ×`factor` under `dst`. Key
+    * columns are offset by `i·Key` per replica i so joins stay within a
+    * replica. The dimension tables (supplier, nation, region) are
+    * copied once: their keys are shared by every replica, so N copies
+    * would match each fact row N times and make every join against
+    * them grow as N² (q_join_broadcast, q_rollup) or N³ (q_area_top3's
+    * supplier ⋈ nation ⋈ region chain). */
+  def replicate(spark: SparkSession, src: String, dst: String,
+                factor: Int): Unit = {
+    def write(name: String, copies: Int = factor)(
+        transform: (DataFrame, Int) => DataFrame): Unit = {
+      val base = Tables.load(spark, src, name)
+      (0 until copies).map(i => transform(base, i)).reduce(_ union _)
+        .write.mode(SaveMode.ErrorIfExists).parquet(s"$dst/$name.parquet")
     }
-    val KEY = 100000000L
-    replicate("lineitem", (df, i) =>
-      df.withColumn("l_orderkey", col("l_orderkey") + lit(i * KEY))
-        .withColumn("l_partkey", col("l_partkey") + lit(i * KEY)))
-    replicate("orders", (df, i) =>
-      df.withColumn("o_orderkey", col("o_orderkey") + lit(i * KEY))
-        .withColumn("o_custkey", col("o_custkey") + lit(i * KEY)))
-    replicate("customer", (df, i) =>
-      df.withColumn("c_custkey", col("c_custkey") + lit(i * KEY)))
-    replicate("part", (df, i) =>
-      df.withColumn("p_partkey", col("p_partkey") + lit(i * KEY)))
-    replicate("supplier", (df, _) => df)
-    replicate("nation", (df, _) => df)
-    replicate("region", (df, _) => df)
-    replicate("events", (df, i) =>
-      df.withColumn("event_id", col("event_id") + lit(i * KEY))
-        .withColumn("user_id", col("user_id") + lit(i * KEY)))
-    // Documents: suffix every 4th token with a replica marker — a
+    def offset(cols: String*)(df: DataFrame, i: Int): DataFrame =
+      cols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(i * Key)))
+    write("lineitem")(offset("l_orderkey", "l_partkey"))
+    write("orders")(offset("o_orderkey", "o_custkey"))
+    write("customer")(offset("c_custkey"))
+    write("part")(offset("p_partkey"))
+    write("events")(offset("event_id", "user_id"))
+    Seq("supplier", "nation", "region").foreach(t => write(t, copies = 1)((df, _) => df))
+    // Documents: suffix every 3rd token with a replica marker — a
     // BIJECTION on tokens, so intra-replica shingle overlap (and thus
     // the planted near-dup structure) is preserved exactly, while
-    // cross-replica 3-gram Jaccard drops to ~0.14 (only windows with
-    // no suffixed token survive), below every dedup threshold. The
-    // earlier append-one-marker scheme left cross-replica Jaccard at
-    // ~(w-2)/w ≈ 0.95: every replica pair was a true near-dup and the
-    // "10×" corpus was really a clique stress test, not 10× data.
-    replicate("documents", (df, i) =>
-      df.withColumn("doc_id", col("doc_id") + lit(i * KEY))
-        .withColumn("text",
-          if (i == 0) col("text")
-          else array_join(
-            transform(split(col("text"), " "),
-              (t, p) => when(pmod(p, lit(4)) === 0, concat(t, lit(s"_r$i")))
-                .otherwise(t)), " ")))
+    // every 3-gram window holds a suffixed token, so cross-replica
+    // 3-gram Jaccard is 0. The earlier append-one-marker scheme left
+    // cross-replica Jaccard at ~(w-2)/w ≈ 0.95: every replica pair was
+    // a true near-dup and the "10×" corpus was really a clique stress
+    // test, not 10× data. Suffixing every 4th token still left ~0.14
+    // (the windows with no suffixed token): below every dedup
+    // threshold, but MinHash banding paired each document with its N−1
+    // replicas, so candidate rows grew with N² (sf0.001 ×4: 32 → 420;
+    // every 3rd token: 32 → 121).
+    write("documents")((df, i) =>
+      offset("doc_id")(df, i).withColumn("text",
+        if (i == 0) col("text")
+        else array_join(
+          transform(split(col("text"), " "),
+            (t, p) => when(pmod(p, lit(3)) === 0, concat(t, lit(s"_r$i")))
+              .otherwise(t)), " ")))
     // Embeddings: circular-shift each replica's vectors by i — shifts
     // preserve intra-replica cosines exactly (both sides rotate the
     // same way) while decorrelating cross-replica pairs (a verbatim
-    // copy would give every vector 9 exact duplicates and inflate the
-    // true near-dup output ~700×).
-    replicate("embeddings", (df, i) => {
-      // circular shift by i (mod dim); replicas ≥ 64 ALSO negate —
-      // negation preserves intra-replica cosines exactly while
-      // decorrelating against the same-shift replica (cos(−a, b) =
-      // −cos(a, b)), giving 128 distinct isometries so a ×100 build
-      // never re-issues a verbatim copy
+    // copy would give every vector N−1 exact duplicates and inflate the
+    // true near-dup output ~700× at 10×). Replicas ≥ 64 ALSO negate —
+    // negation preserves intra-replica cosines exactly while
+    // decorrelating against the same-shift replica (cos(−a, b) =
+    // −cos(a, b)), giving 128 distinct isometries so a ×100 build
+    // never re-issues a verbatim copy.
+    write("embeddings")((df, i) => {
       val s = i % 64
       val shifted =
         if (s == 0) col("embedding")
         else concat(slice(col("embedding"), s + 1, 64 - s),
                     slice(col("embedding"), 1, s))
-      val moved = if (i < 64) shifted
-                  else transform(shifted, x => -x)
-      df.withColumn("vec_id", col("vec_id") + lit(i * KEY))
+      val moved = if (i < 64) shifted else transform(shifted, x => -x)
+      offset("vec_id")(df, i)
         .withColumn("embedding", if (i == 0) col("embedding") else moved)
     })
+  }
 
-    // dedup_embedding_blocked is the oracle-PINNED fixed config
-    // (8 centroids at any n — candidate pairs ~n²/centroids by
-    // construction, so its ratio is expected super-linear); the scale
-    // path users actually run at big n is embeddingNearDupScaled
-    // (√n centroids, ~n^1.5 pairs), probed as dedup_embedding_scaled.
-    val allProbes: Seq[(String, (SparkSession, String) => DataFrame)] =
-      Seq("q1_agg", "q_join_shuffle", "q_sessionize",
-        "q_window_topn", "q_grouped_topk_custom", "q_scan_filter",
-        "q_funnel", "dedup_minhash_lsh", "dedup_simhash",
-        "dedup_ngram_jaccard", "dedup_clusters_dist",
-        // clusters + quality join + one clustered shuffle for the
-        // size window and the top-1 heap — should track the cluster
-        // pipeline's own growth and nothing more
-        "dedup_keep_best",
-        "dedup_embedding_blocked", "text_tfidf",
-        "stream_running_totals", "stream_attribution",
-        "pipeline_training_data",
-        // per-source stage-survival counts: one corpus pass + the
-        // LSH drop join the pipeline itself pays — same growth class
-        "pipeline_funnel",
-        // the full composed corpus build (quality -> dedups ->
-        // decontamination -> packing) — stage costs are each probed
-        // individually above; this row shows composition overhead
-        "pipeline_pretrain_corpus",
-        "q_skew_join_salted", "q_approx_sketch", "q_csv_explode",
-        // strata counts are fixed while rows/stratum grow ×N — the
-        // worst case for the old full-sort rank, the best case for
-        // the round-5 GroupedTopK heap-prune (≤100 rows survive)
-        "q_stratified_sample",
-        // batch×corpus band join: cost should track the batch side
-        // and matched buckets, never corpus self-pairing
-        "dedup_incremental",
-        // two-phase prefix sum: per-bucket windows + √n bucket prefix
-        "pack_sequences",
-        // hash-bucketed global rank: 256 parallel windows + offsets
-        "q_global_shuffle",
-        // broadcast inverted-index join against a fixed-size eval set
-        "text_decontaminate",
-        // per-doc scalar projection — should be pure row-linear
-        "text_repetition",
-        // inverted window-hash index + per-doc island merge; the ×10
-        // corpus decorrelates cross-replica windows, so shared-window
-        // volume grows ~linearly with the replicated near-dup pairs
-        "dedup_verbatim",
-        // map-only assignment passes + k·dim-per-partition updates;
-        // the model (k×64 doubles) is scale-invariant
-        "emb_kmeans",
-        // the broadcast-join assignment twin: adds an n·k-row arg-min
-        // shuffle per pass — the price of k beyond the literal shape
-        "emb_kmeans_joined",
-        // SemDeDup scale config: k=⌈√n⌉ keeps within-cell pair work
-        // ~n^1.5; the fixed-k=8 gate config would go n²/8
-        "dedup_semantic_scaled",
-        // Bloom prefilter: map-side probe + verify join over true
-        // hits only — the train side's shuffle is output-bounded
-        "text_decontaminate_bloom",
-        // per-source DISTINCT vocab then self-join: fan-out bounded
-        // by the fixed source count; one shuffle on (source, shingle)
-        "text_source_overlap",
-        // KMV sketch twin: the distinct-shingle pass grows with the
-        // corpus, everything after is sources×k rows — the gap to
-        // text_source_overlap above IS the sketch's value
-        "text_overlap_kmv",
-        // (k−1)/h_k cardinality off the same sketch — no
-        // COUNT(DISTINCT) shuffle over the shingle universe
-        "text_source_cardinality",
-        // per-pair scalar projection (normalize + tokenize + multiset
-        // fold inside the row) — must be scan-linear like q_hash_split
-        "eval_token_f1",
-        // df shuffle + join-back, the text_tfidf growth class
-        "text_ngram_novelty",
-        // one word-count shuffle; the rank window sees only the TYPE
-        // table, which grows sub-corpus (replica-suffixed vocab)
-        "text_vocab_coverage",
-        // single partial-agg fold to a d² buffer: one corpus scan,
-        // shuffle volume fixed at 32 KiB/partition — must be ~linear
-        // with a near-zero shuffle share
-        "emb_gram",
-        // hashed classifier inference: shuffle-free per-doc projection
-        "text_quality_classifier",
-        // the model-shaped corpus build (classifier gate + bloom
-        // decontamination + shared dedup/packing stages)
-        "pipeline_pretrain_model",
-        // map-only scalar projection — should be pure row-linear
-        "emb_quantize_sq8",
-        // 16 literal-sign folds per row, no shuffle — row-linear
-        "emb_project_rp",
-        // 5 fixed strata, √count quotas, GroupedTopK prune to ≤200
-        "q_temperature_mix",
-        // token-mass quotas + greedy per-source prefix fill; the
-        // prefix scan is GroupedTopK-bounded at budget-many docs
-        "q_token_budget_mix",
-        // FIXED 8-centroid IVF search (oracle-pinned toy config):
-        // bucket ≈ n/8, so per-query cost grows linearly — kept as
-        // the contrast row for the √n configs below
-        "sim_ivf",
-        // √n-centroid IVF search (+SQ8): probe cost ~nprobe·√n per
-        // query — per-query work SHRINKS relative to the corpus; the
-        // timed figure still includes the one-off corpus assignment
-        // pass, which the materialized index amortizes away
-        "sim_ivf_scaled", "sim_ivf_sq8_scaled",
-        // two-level coarse assignment: same cells/nprobe as the flat
-        // scaled config but ~O(n^¼·dim)/row assignment — the flat
-        // row's direct contrast (assignment cost is the only delta)
-        "sim_ivf_2level_scaled",
-        // build-once bucketed index + pruned-cell search round trip
-        // (gate config pins 8 cells for the oracle; the build pass
-        // dominates and should track corpus size ~linearly)
-        "sim_ivf_indexed",
-        // same two-phase packing plan, counts read from a column
-        "pack_sequences_precounted",
-        // map-only epoch resampling: broadcast quota join + hash
-        // threshold + explode — should be row-linear like the scans
-        "q_mix_epochs",
-        // label-constrained search: the sim_ivf_scaled plan with the
-        // label-mismatch predicate in the probe join — should track
-        // sim_ivf_scaled (the filter only DROPS candidate rows)
-        "sim_hard_negatives_scaled",
-        // map-only per-row rule arithmetic — scan-linear like q_hash_split
-        "text_gopher_rules",
-        // n·k neighbor graph from IVF-cell candidates: fixed 8 cells
-        // is the contrast row (cell ≈ n/8 → candidate pairs ~n²/8);
-        // √n cells keeps total candidate scores ~nprobe·n^1.5
-        "sim_knn_graph", "sim_knn_graph_scaled",
-        // mutual edges + min-label components over the √n-cell graph
-        "sim_mutual_knn_clusters",
-        // epoch resample → per-copy hash order → two-phase pack
-        "pipeline_epoch_pack",
-        // pure per-row projection — the zero-shuffle baseline: any
-        // super-linear growth here is environment, not plan
-        "q_hash_split",
-        // hash order + position self-join (pos ↔ pos+1) + histogram
-        // expectation — must track q_global_shuffle, never a global
-        // single-partition window
-        "q_shuffle_audit",
-        // one token-count shuffle to train + map-only scoring
-        "text_unigram_logprob",
-        // map-only window explode: rows grow ~n_tokens/stride
-        "text_chunk",
-        // window-index shuffle + doc-level interval join-back; the
-        // rewrite side must NOT inherit the index's n·w row growth
-        "dedup_verbatim_rewrite",
-        // one segment-hash shuffle + one doc reassembly shuffle over
-        // n/16 segment rows — should be row-linear
-        "dedup_paragraphs",
-        // map-only hash-threshold keep + weight projection — the
-        // q_hash_split class: any super-linear growth is environment
-        "q_quality_sample",
-        // one hash aggregate of partial-aggregable figures — the
-        // shuffle moves per-source partials, never rows
-        "q_corpus_report",
-        // batched stub-embed pass + the sim_ivf_scaled search plan
-        // over the derived vectors — should track sim_ivf_scaled
-        "mm_embed_ann",
-        // two corpus scans (bm25 score + dense cosine) + fusion over
-        // two 20-row lists — scan-linear, fusion scale-invariant
-        "q_hybrid_search",
-        // asymmetric prefix filter: contained-side prefix × FULL
-        // posting list — wider than the Jaccard join; candidate
-        // volume rides the rare-shingle df distribution
-        "dedup_containment",
-        // full-outer join of 16-byte (id, md5) projections — the
-        // cheapest two-version comparison, row-linear by design
-        "q_corpus_diff",
-        // two driver model reads + a map-only scored TakeOrdered —
-        // top-k cost is per-partition heaps, never a global sort
-        "text_bm25",
-        // one corpus word-count shuffle + VOCAB-sized merge
-        // iterations: replication grows the corpus 10x but the vocab
-        // only ~4x (replica-suffixed types), so growth is sub-corpus
-        "text_bpe_merges",
-        // training as above + a map-only fold per word to apply —
-        // the apply side should add corpus-linear time only
-        "text_bpe_apply",
-        // two-stage PQ: ADC scan + √n-shortlist exact re-rank
-        "sim_ivf_pq_scaled",
-        // persisted PQ codes round trip (build dominates, ~linear)
-        "sim_ivf_pq_indexed",
-        // SRP-LSH multi-probe search: map-only banding + broadcast
-        // probe join — candidate volume (not the banding) is the
-        // scale risk on near-orthogonal data; see the [lsh] table
-        "sim_lsh_cosine_scaled",
-        // banded pair generation + exact verify; candidate volume
-        // ~bands·(bits+1)·n²/2^bits is the adversarial-case cost the
-        // [lshplant] table prices at the bits-rule switch
-        "dedup_embedding_lsh",
-        // pure regex projections — scan-linear by construction
-        "text_pii_redact", "text_normalize",
-        // segment df count + co-partitioned join-back + reassembly
-        "text_boilerplate",
-        // two curations + pack + REAL shard export (memoized after
-        // rep 1) + fingerprint diff + datasheet
-        "pipeline_release_audit",
-        // filtered posting build + broadcast query plan + decimal agg
-        "text_bm25_batch",
-        // non-id-key two-phase prefix sum ((quality, id-range) bucket)
-        "pack_curriculum",
-        // bigram-count shuffle train (memoized) + map-only pair score
-        "text_bigram_logprob",
-        // (source, quality)-histogram rank + broadcast join back —
-        // never a corpus-sized window partition
-        "text_quality_calibrate",
-        // build-once posting index + bucket-pruned query batch
-        "text_bm25_indexed",
-        // MG candidate pass (map-only, (m+1) rows/partition out) +
-        // exact verify of candidates only — both scans row-linear,
-        // the verify shuffle bounded at candidates×partitions
-        "text_heavy_hitters",
-        // two map-only length histograms + PSI math on 10 bucket rows
-        "q_corpus_drift",
-        // memoized Lloyd fit + ONE cluster-keyed window over the
-        // assignment — should track emb_kmeans plus a window pass
-        "emb_outliers",
-        // one source-histogram partial agg; the waterfill windows see
-        // sources-many rows — must be scan-linear like q_corpus_report
-        "q_budget_waterfill",
-        // one user_id window shuffle (the sessionize exchange); lag
-        // state is the 3-row frame tail — row-linear
-        "q_sequence_examples",
-        // one (item,label) partial-agg shuffle + panel-sized windows
-        "eval_majority_vote",
-        // engine state-store dedup: per-batch cost = batch vs state
-        // lookup; state rows = distinct keys, never corpus rows
-        "stream_dedup_watermark",
-        // one explode to turn rows + a doc-keyed offsets window —
-        // the text_chunk growth class
-        "text_sft_spans",
-        // 32 codegen'd shift/mask terms + one cell partial agg —
-        // scan-linear; cells grow with the occupied grid, not rows
-        "q_zorder_layout",
-        // two per-doc counters + one source partial agg
-        "text_fertility",
-        // keyed state = last 3 types/user; per-row state lookup like
-        // stream_dedup_watermark — expected row-linear
-        "stream_sequence_examples",
-        // map-only in-row pair generation + pair/unigram partial aggs
-        // (bounded by OBSERVED vocabularies, sub-corpus growth)
-        "text_skipgram_pmi",
-        // per-row F1 reward + panel-sized rank windows per prompt
-        "eval_preference_pairs",
-        // per round: one edges⋈ranks join + one dst-keyed partial agg
-        // over localCheckpoint'ed frames — tracks sim_knn_graph_scaled
-        // (the edge derivation) plus 2 bounded rounds
-        "sim_pagerank_knn",
-        // per-batch histogram + ≤10-entry driver merge; PSI math on
-        // the 10-row bucket table
-        "stream_corpus_drift",
-        // per-batch MG summaries + driver merge; one corpus-wide
-        // exact-verify job at close
-        "stream_heavy_hitters",
-        // --- completing the stream_* probe coverage (r12 verdict
-        // item 6); growth classes: scan (per-batch job over the
-        // batch), state-store (per-row keyed-state lookup),
-        // verify-bound (the close-the-books job is the growth term)
-        // per-batch agg + threshold into the standing blacklist +
-        // fused left_anti — scan class (no per-row keyed state)
-        "stream_blacklist",
-        // rank window per batch over the RUNNING-AGG OUTPUT (keys,
-        // not feed rows) — verify-bound on the key table
-        "stream_province_top3",
-        // event-time sliding windows + watermark: state rows = open
-        // windows × keys — state-store class
-        "stream_sliding_window",
-        // flatMapGroupsWithState session builder — state-store class
-        // (the replay harness serializes its per-row cost)
-        "stream_sessions",
-        // per-batch shingle join vs the standing broadcast eval
-        // index — scan class, batch-bounded
-        "stream_decontaminate",
-        // per-batch band join vs the standing band store — scan
-        // class, batch×matched-buckets bounded
-        "stream_dedup_incremental",
-        // stateful chunk-pack with carry tokens — state-store class,
-        // output grows with the feed
-        "stream_chunk_pack",
-        // per-batch KMV fold into the standing k-row sketch — scan
-        // class; the merge is model-sized
-        "stream_overlap_kmv",
-        // query micro-batches vs the standing IVF index — per-batch
-        // cost = probed cells; the one-off index build dominates
-        "stream_ann_search",
-        // query micro-batches vs the standing posting index —
-        // term-bucket bounded per batch; build dominates
-        "stream_bm25_search",
-        // pure regex projection — the text_pii_redact class
-        "text_code_detect",
-        // --- round 13 wave
-        // two LM fits (token-count shuffles, memoized) + one map-only
-        // scoring scan — the text_unigram_logprob class
-        "text_dsir_weights",
-        // one duel-pair shuffle + a k²-bounded driver fit
-        "eval_bradley_terry",
-        // bounded-heap GroupedTopK per source; output fixed at
-        // cap×sources
-        "q_domain_cap",
-        // the pack prefix sum + one global partial agg; one row out
-        "pack_efficiency",
-        // brute-force ground truth (corpus scan per query batch) +
-        // bucket-pruned IVF + a panel-sized join
-        "sim_ivf_recall",
-        // memoized Lloyd model + one map-only k-distance projection
-        "emb_silhouette",
-        // two broadcast-query corpus scans (full + 16-dim prefix) +
-        // a panel join
-        "sim_matryoshka_recall",
-        // per-batch map-only scoring vs the standing LM pair
-        "stream_dsir",
-        // DSIR gate -> domain cap -> pack arithmetic; three one-row
-        // aggregates cross-joined
-        "pipeline_curation_audit",
-        // map-only: c folds over 5 literal hash draws per row
-        "eval_pass_at_k",
-        // memoized Lloyd model + bounded-heap per-cluster selection
-        "emb_cluster_sample",
-        // per-batch duel aggregation; standing state = k² win counts
-        "stream_bradley_terry",
-        // one map-only projection + a 10-group partial agg
-        "eval_ece",
-        // window formulation from SQL; the DataFrame twin's heap
-        // stays a DataFrame-side optimization
-        "q_domain_cap_sql",
-        // per-batch map-only assignment vs the standing Lloyd model
-        "stream_cluster_assign",
-        // --- round 14 wave
-        // per-bucket FFD kernel (task state ~√n) + √n bin-count prefix
-        "pack_whole_doc",
-        // same placement + ONE global partial agg; one row out
-        "pack_whole_doc_audit",
-        // the SQL serving twin of text_bm25_indexed: literal term
-        // IN-list prunes the posting buckets — must track the
-        // DataFrame twin's class (build dominates, search pruned)
-        "text_bm25_sql",
-        // the SQL serving twin of sim_ivf_sq8: probed-cell IN-list
-        // prunes the bucketed index scan — tracks sim_ivf_indexed
-        "sim_ivf_sql",
-        // broadcast-kernel BPE apply (40 pinned merges): map-only
-        // like text_bpe_apply's fold; prices the kernel per-word scan
-        "text_bpe_apply_big",
-        // one DISTINCT-source pass; the DoReMi arithmetic runs on the
-        // domains-many loss table — metadata-scale by construction
-        "q_domain_reweight",
-        // majority gate (panel windows) + pair windows + one duel
-        // partial agg + k²-bounded driver fit + three one-row aggs
-        "pipeline_rlhf_audit",
-        // the gated cluster machinery + one broadcast seed-cluster
-        // join + a map-only reason tag — must track dedup_clusters
-        "q_delete_propagate",
-        // reweight quotas realized through the shared resampler:
-        // metadata-scale fit + the map-only q_mix_epochs corpus side
-        "q_mix_doremi")
-        .map(n => n -> SparkEntry.queries(n)) ++ Seq(
-      // both scale configs are oracle-gated since round 7
-      // (dedup_embedding_scaled / dedup_simhash_wide in SparkEntry)
-      "dedup_embedding_scaled" -> SparkEntry.queries("dedup_embedding_scaled"),
-      "dedup_simhash_wide" -> SparkEntry.queries("dedup_simhash_wide"),
-      // the same join/agg as q_skew_join_salted but UNSALTED, leaving
-      // skew to AQE's runtime split — benchmarked beside the manual
-      // salt so SCALING.md shows whether the ×8 dim replication still
-      // earns its complexity on Spark 4 AQE (oracle-gated since r8)
-      "q_skew_join_plain_aqe" -> SparkEntry.queries("q_skew_join_plain_aqe"))
+  /** One markdown row: the query's 1× and N× counters and its class. */
+  private def row(name: String, factor: Int,
+                  base: Profile.Result, big: Profile.Result): String = {
+    val e = exponent(base.totalRows, big.totalRows, factor)
+    Seq(name, s"${base.rows} -> ${big.rows}",
+      s"${base.totalRows} -> ${big.totalRows}",
+      s"${big.largest.name} ${big.largest.rows}",
+      s"${base.shuffleBytes} -> ${big.shuffleBytes}",
+      s"${base.exchanges} -> ${big.exchanges}",
+      f"$e%.2f", growthClass(e)).mkString("| ", " | ", " |")
+  }
 
-    // "recall" / "plant" are pseudo-names selecting the nprobe-recall
-    // and planted-tight-pair tables below (always on in a full sweep;
-    // re-probing one operator shouldn't pay the ~1-min recall sweeps)
-    val pseudo = Set("recall", "plant", "searchrecall", "clusterquality",
-      "packlen", "twolevel", "pq", "lsh", "lshplant", "containment", "kmv")
-    val probes = only match {
-      case Some(names) =>
-        val unknown = names -- allProbes.map(_._1).toSet -- pseudo
-        require(unknown.isEmpty, s"unknown probe names: $unknown")
-        allProbes.filter { case (n, _) => names(n) }
-      case None => allProbes
-    }
-
-    // median of 3 reps per query per scale — the bench learned this
-    // lesson twice (rounds 4 and 6): a single-pass time lets one
-    // GC/page-cache outlier masquerade as a scaling verdict (a round-7
-    // single-pass run printed dedup_minhash_lsh 28.8 s at 1× vs 3.5 s
-    // at 10×, i.e. "sub-linear" by an order of magnitude, on
-    // byte-identical code). Queries whose first rep exceeds 20 s keep
-    // that single rep: at that magnitude the verdict is unambiguous
-    // and two more reps of a deliberately-kept quadratic config
-    // (dedup_embedding_blocked) would double the probe's runtime.
-    def timeAll(dir: String): Map[String, (Double, Long)] = probes.map {
-      case (name, fn) =>
-        var rows = 0L
-        def oneRep(): Double = {
-          val t0 = System.nanoTime()
-          rows = fn(spark, dir).count()
-          spark.catalog.clearCache()
-          System.gc()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val first = oneRep()
-        val times =
-          if (first > 20.0) Seq(first)
-          else (first +: Seq.fill(2)(oneRep())).sorted
-        name -> ((times(times.size / 2), rows))
-    }.toMap
-
-    timeAll(src) // warmup (JIT + codegen)
-    val base = timeAll(src)
-    val big = timeAll(dst)
-    // rows at both scales contextualize the ratio: an operator whose
-    // TRUE output grows super-linearly (near-dup pairs in a dup-heavy
-    // corpus) can't have sub-linear wall time
-    println(f"[scale] ${"query"}%-24s ${"1x(s)"}%8s ${s"${factor}x(s)"}%8s ${"ratio"}%7s ${"1x rows"}%9s ${s"${factor}x rows"}%9s")
-    probes.foreach { case (q, _) =>
-      val (bs, br) = base(q); val (gs, gr) = big(q)
-      println(f"[scale] $q%-24s $bs%8.2f $gs%8.2f ${gs / bs}%7.1f $br%9d $gr%9d")
-    }
-
-    // recall-vs-nprobe dial for the IVF-blocked embedding near-dup,
-    // mirroring the simhash banding table: exact all-pairs is the
-    // ground truth (blocked output ⊆ exact by construction — the
-    // verify step scores true cosine — so recall = count ratio);
-    // centroid count grows √n exactly like embeddingNearDupScaled.
-    def recallTable(dir: String, label: String): Unit = {
-      val emb = Tables.embeddings(spark, dir).cache()
-      val n = emb.count()
-      val exact = graft.operators.Similarity.allPairsNearDup(emb).count()
-      val cents = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      Seq(1, 2, 4).foreach { np =>
-        val t0 = System.nanoTime()
-        val got = graft.operators.Similarity.blockedNearDup(emb, cents, np).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[recall] $label%-6s n=$n%-6d centroids=$cents%-4d nprobe=$np " +
-          f"pairs=$got%6d/$exact%-6d (${100.0 * got / math.max(exact, 1)}%5.1f%%) $sec%7.2f s")
+  def main(args: Array[String]): Unit = {
+    val factor = args.headOption.map(_.toInt).getOrElse(4)
+    require(factor >= 2, s"replication factor must be at least 2, got $factor")
+    val names = args.lift(1).map(_.split(',').toSeq)
+      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    val src = "/root/testdata/sf0.1"
+    val dst = java.nio.file.Files.createTempDirectory(s"graft-scale-x$factor")
+      .toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dst))
+    val spark = graft.LocalSession()
+    try {
+      replicate(spark, src, dst.getPath, factor)
+      // plain ASCII: the table is read off stdout, whatever its charset
+      println(s"| query | result rows | operator rows | largest operator at ${factor}x " +
+        s"| shuffle bytes | exchanges | exponent | class (> $SuperLinear: super-linear) |")
+      println("|---|---|---|---|---|---|---|---|")
+      names.foreach { name =>
+        def profile(dir: String): Profile.Result =
+          try Profile.run(SparkEntry.queries(name)(spark, dir))
+          // a query's own cached frames are released after its run
+          finally spark.catalog.clearCache()
+        val line =
+          try row(name, factor, profile(src), profile(dst.getPath))
+          catch { case e: Throwable =>
+            s"| $name | error: ${e.getClass.getSimpleName}: " +
+              String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
+                .take(160).replace("|", "\\|") + " |"
+          }
+        println(line)
       }
-      emb.unpersist()
-    }
-    if (only.forall(_("recall"))) {
-      recallTable(src, "1x")
-      recallTable(dst, s"${factor}x")
-    }
-
-    // Tight-pair recall: the synthetic corpus has almost no tight
-    // duplicate structure (nearly all true pairs sit at 0.45–0.6,
-    // the borderline regime a coarse quantizer must miss), so the
-    // background recall table above can't show the regime real dedup
-    // corpora live in — copies/re-encodes at cosine ≥0.9 over a
-    // separated background. Plant that regime: every 50th vector
-    // gains a deterministic near-copy (v + 0.2·shift₁(v), cosine
-    // ≈0.95–0.99 to its source), and recall is measured on the
-    // planted pairs alone. Expectation under the IVF contract: a
-    // tight copy lands in (or next to) its source's cell, so planted
-    // recall should sit far above the background rows above.
-    def plantedRecall(dir: String, label: String): Unit = {
-      import graft.functions.VectorFunctions.cosine
-      // beyond the replica key space (replica ids reach ~9.0003e8)
-      val PlantOffset = 10000000000L
-      val every = 50
-      val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      val planted = emb.where(pmod(col("vec_id"), lit(every)) === 0)
-        .select((col("vec_id") + lit(PlantOffset)).as("vec_id"),
-          zip_with(col("embedding"),
-            concat(slice(col("embedding"), 2, 63), slice(col("embedding"), 1, 1)),
-            (a, b) => a + lit(0.2f) * b).cast("array<float>").as("embedding"))
-      val corpus = emb.unionByName(planted).cache()
-      val n = corpus.count()
-      // measured tightness of the plant (construction predicts
-      // ~0.95+; report rather than assert)
-      val truth = emb.select(col("vec_id").as("id_a"), col("embedding").as("v_a"))
-        .join(planted.select((col("vec_id") - lit(PlantOffset)).as("id_a"),
-                             col("embedding").as("v_b")), "id_a")
-        .withColumn("sim", cosine(col("v_a"), col("v_b")))
-      val Array(nPlanted, minSim, medSim) = truth
-        .agg(count(lit(1)).cast("double"), min("sim"),
-             expr("percentile(sim, 0.5)")).head.toSeq.toArray
-        .map(_.toString.toDouble)
-      val cents = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      Seq(1, 2, 4).foreach { np =>
-        val t0 = System.nanoTime()
-        val found = graft.operators.Similarity.blockedNearDup(corpus, cents, np)
-          .where(col("id_b") - col("id_a") === PlantOffset &&
-                 pmod(col("id_a"), lit(every)) === 0)
-          .count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        println(f"[plant] $label%-6s n=$n%-6d planted=${nPlanted.toLong}%-5d " +
-          f"cos[min=$minSim%.3f med=$medSim%.3f] centroids=$cents%-4d nprobe=$np " +
-          f"found=$found%5d/${nPlanted.toLong}%-5d (${100.0 * found / nPlanted}%5.1f%%) $sec%7.2f s")
-      }
-      corpus.unpersist()
-    }
-    if (only.forall(_("plant"))) {
-      plantedRecall(src, "1x")
-      plantedRecall(dst, s"${factor}x")
-    }
-
-    // Top-k recall of the √n-centroid IVF SEARCH against brute-force
-    // ground truth — the search twin of the near-dup recall tables:
-    // recall@5 = share of each query's true top-5 the pruned search
-    // returns at the nprobe settings a user would dial.
-    def searchRecallTable(dir: String, label: String): Unit = {
-      val emb = Tables.embeddings(spark, dir).cache()
-      val n = emb.count()
-      val cents = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      val truthPairs = SparkEntry.queries("sim_brute_force")(spark, dir)
-        .select("q_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      Seq(1, 2, 4).foreach { np =>
-        val t0 = System.nanoTime()
-        val got = graft.operators.Similarity.ivfSearch(emb, cents, np, sq8 = false)
-          .select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val sec = (System.nanoTime() - t0) / 1e9
-        val rec = 100.0 * got.count(truthPairs) / math.max(truthPairs.size, 1)
-        println(f"[searchrecall] $label%-6s n=$n%-7d centroids=$cents%-4d " +
-          f"nprobe=$np recall@5=$rec%5.1f%% $sec%7.2f s")
-      }
-      emb.unpersist()
-    }
-    if (only.forall(_("searchrecall"))) {
-      searchRecallTable(src, "1x")
-      searchRecallTable(dst, s"${factor}x")
-    }
-
-    // Cluster purity/completeness of mutual-k-NN clustering over a
-    // planted corpus (every 50th vector + 2 near-copies at cosine
-    // ≈0.96 — ground-truth classes; see ClusterQuality's scaladoc for
-    // the metric definitions). The quality twin of the recall tables:
-    // sim_mutual_knn_clusters is the one ANN-family operator whose
-    // OUTPUT quality the oracle gate can't grade.
-    def clusterQualityTable(dir: String, label: String): Unit = {
-      val every = 50
-      val copies = 2
-      val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      val corpus = ClusterQuality.plantedCorpus(emb, every, copies).cache()
-      val n = corpus.count()
-      val truth = ClusterQuality.plantedTruth(emb, every, copies).cache()
-      val nClasses = truth.select("cls").distinct().count()
-      val cents = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-      // k sweep around the gate config (√n cells, nprobe=2, k=3):
-      // k is the purity/completeness dial — each planted member's
-      // top-2 slots go to its 2 siblings, so k−2 SPARE slots per
-      // member are where background mutual edges (→ intruders, →
-      // cross-group chains) come from. k=2 leaves no spare slot.
-      Seq(2, 3, 5).foreach { k =>
-        val t0 = System.nanoTime()
-        val clusters = graft.operators.Similarity
-          .mutualKnnClusters(corpus, cents, 2, k).cache()
-        val nClustered = clusters.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        val pur = ClusterQuality.purity(clusters)
-        val ppur = ClusterQuality.plantedClusterPurity(clusters, truth)
-        val comp = ClusterQuality.completeness(clusters, truth)
-        val intact = ClusterQuality.intactFraction(clusters, truth)
-        println(f"[quality] $label%-6s n=$n%-7d classes=$nClasses%-5d " +
-          f"centroids=$cents%-4d k=$k nprobe=2 clustered=$nClustered%-6d " +
-          f"purity=$pur%5.3f plantedPurity=$ppur%5.3f " +
-          f"completeness=$comp%5.3f intact=$intact%5.3f $sec%7.2f s")
-        clusters.unpersist()
-      }
-      corpus.unpersist(); truth.unpersist()
-    }
-    if (only.forall(_("clusterquality"))) {
-      clusterQualityTable(src, "1x")
-      clusterQualityTable(dst, s"${factor}x")
-    }
-
-    // Two-level coarse quantizer: (a) agreement rate of the
-    // hierarchical assignment with the flat argmax (cell-level — how
-    // often the pSuper probe finds the true nearest cell), (b) search
-    // recall@5 of the two-level IVF search against brute force, (c)
-    // wall time vs the flat scaled search on the same corpus. The
-    // cost side shrinks as ~c^¾/c of the flat scan; these rows price
-    // the recall that buys.
-    def twoLevelTable(dir: String, label: String): Unit = {
-      import graft.functions.NearestCells
-      val emb = Tables.embeddings(spark, dir).cache()
-      val n = emb.count()
-      val cents = emb.where(col("vec_id") <
-          math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt))
-        .select(col("vec_id"), col("embedding").cast("array<double>"))
-        .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
-      val c = cents.size
-      val pS = NearestCells.pSuperFor(c)
-      val agree = emb.select(
-          (NearestCells.nearestCellsTwoLevel(col("embedding"), cents, 1, pS) ===
-           NearestCells.nearestCellsFlat(col("embedding"), cents, 1))
-            .cast("long").as("same"))
-        .agg(avg("same")).head.getDouble(0)
-      val truth = SparkEntry.queries("sim_brute_force")(spark, dir)
-        .select("q_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      def recallAndTime(fn: => DataFrame): (Double, Double) = {
-        val t0 = System.nanoTime()
-        val got = fn.select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val sec = (System.nanoTime() - t0) / 1e9
-        (100.0 * got.count(truth) / math.max(truth.size, 1), sec)
-      }
-      val (recFlat, secFlat) = recallAndTime(
-        SparkEntry.queries("sim_ivf_scaled")(spark, dir))
-      val (rec2, sec2) = recallAndTime(
-        SparkEntry.queries("sim_ivf_2level_scaled")(spark, dir))
-      println(f"[twolevel] $label%-6s n=$n%-7d cells=$c%-4d pSuper=$pS " +
-        f"cellAgree=${100 * agree}%5.1f%% recall@5 flat=$recFlat%5.1f%% " +
-        f"2level=$rec2%5.1f%% time flat=$secFlat%5.2f s 2level=$sec2%5.2f s")
-      emb.unpersist()
-    }
-    if (only.forall(_("twolevel"))) {
-      twoLevelTable(src, "1x")
-      twoLevelTable(dst, s"${factor}x")
-    }
-
-    // PQ compression: search recall@5 of the scaled IVF+PQ search
-    // (4 bytes/vector) against brute force, next to the SQ8 recipe
-    // (64 bytes/vector) on the same corpus — prices the recall the
-    // extra 16x memory cut costs, and times both.
-    def pqTable(dir: String, label: String): Unit = {
-      val truth = SparkEntry.queries("sim_brute_force")(spark, dir)
-        .select("q_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      def recallAndTime(fn: => DataFrame): (Double, Double) = {
-        val t0 = System.nanoTime()
-        val got = fn.select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val sec = (System.nanoTime() - t0) / 1e9
-        (100.0 * got.count(truth) / math.max(truth.size, 1), sec)
-      }
-      val (recSq8, secSq8) = recallAndTime(
-        SparkEntry.queries("sim_ivf_sq8_scaled")(spark, dir))
-      val (recPq, secPq) = recallAndTime(
-        SparkEntry.queries("sim_ivf_pq_scaled")(spark, dir))
-      println(f"[pq] $label%-6s recall@5 sq8=$recSq8%5.1f%% pq=$recPq%5.1f%% " +
-        f"time sq8=$secSq8%5.2f s pq=$secPq%5.2f s")
-    }
-    if (only.forall(_("pq"))) {
-      pqTable(src, "1x")
-      pqTable(dst, s"${factor}x")
-    }
-
-    // SRP-LSH search: recall@5 and candidate volume of the fixed
-    // exact-probe config (4 bands × 8 bits) vs the scaled Hamming-2
-    // multi-probe config against brute force. The fixture's
-    // near-orthogonal vectors (top-5 cosines ~0.3-0.37) are SRP-LSH's
-    // ADVERSARIAL case — per-plane agreement ~0.6 makes recall track
-    // candidate fraction, the regime where model-free banding buys
-    // nothing over a scan and a trained IVF wins. The table prices
-    // that honestly; at ≥32× the bits rule's 16-bit regime executes.
-    def lshTable(dir: String, label: String): Unit = {
-      val n = Tables.parquetRowCount(spark, s"$dir/embeddings.parquet")
-      val bits = graft.operators.Similarity.lshBitsForN(n)
-      val emb = Tables.embeddings(spark, dir).cache()
-      val truth = SparkEntry.queries("sim_brute_force")(spark, dir)
-        .select("q_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      def recallAndTime(fn: => DataFrame): (Double, Double) = {
-        val t0 = System.nanoTime()
-        val got = fn.select("q_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet
-        val sec = (System.nanoTime() - t0) / 1e9
-        (100.0 * got.count(truth) / math.max(truth.size, 1), sec)
-      }
-      val (recExact, secExact) = recallAndTime(
-        graft.operators.Similarity.lshSearch(emb, 8, flips = 0))
-      val (recProbe, secProbe) = recallAndTime(
-        graft.operators.Similarity.lshSearch(emb, bits, flips = 2))
-      // the r12 similarity-aware rule the SCALE gate now runs: the
-      // size rule capped by the target-similarity recall model — at
-      // the ≥32× regime where the size rule's 16 bits collapsed to
-      // 14 %, the cap holds the dial at the recall-bearing width
-      val simBits = graft.operators.Similarity.lshSearchBitsFor(n)
-      val (recSim, secSim) = recallAndTime(
-        graft.operators.Similarity.lshSearch(emb, simBits, flips = 2))
-      val (recIvf, secIvf) = recallAndTime(
-        SparkEntry.queries("sim_ivf_scaled")(spark, dir))
-      println(f"[lsh] $label%-6s n=$n%-7d bits=$bits recall@5 " +
-        f"exact=$recExact%5.1f%% multiprobe2=$recProbe%5.1f%% " +
-        f"simaware(bits=$simBits)=$recSim%5.1f%% " +
-        f"ivfScaled=$recIvf%5.1f%% time exact=$secExact%5.2f s " +
-        f"probe=$secProbe%5.2f s simaware=$secSim%5.2f s ivf=$secIvf%5.2f s")
-      graft.operators.Similarity.lshSearchGuard(n)
-        .foreach(g => println(s"[lsh] $label guard: $g"))
-      emb.unpersist()
-    }
-    if (only.forall(_("lsh"))) {
-      lshTable(src, "1x")
-      lshTable(dst, s"${factor}x")
-    }
-
-    // LSH near-dup in its TRUE regime: planted tight copies (cosine
-    // ≈0.95–0.99, the plantedRecall construction) must be recalled by
-    // the banded Hamming-1 candidates — the measurement that justifies
-    // dedup_embedding_lsh next to the honest weakness of the
-    // moderate-sim [lsh] search rows above. Also reports background
-    // (0.45-threshold) pair recall vs the exact all-pairs truth at 1×.
-    def lshPlantTable(dir: String, label: String): Unit = {
-      val PlantOffset = 10000000000L
-      val every = 50
-      val emb = Tables.embeddings(spark, dir).select("vec_id", "embedding")
-      val planted = emb.where(pmod(col("vec_id"), lit(every)) === 0)
-        .select((col("vec_id") + lit(PlantOffset)).as("vec_id"),
-          zip_with(col("embedding"),
-            concat(slice(col("embedding"), 2, 63), slice(col("embedding"), 1, 1)),
-            (a, b) => a + lit(0.2f) * b).cast("array<float>").as("embedding"))
-      val corpus = emb.unionByName(planted).cache()
-      val n = corpus.count()
-      val nPlanted = planted.count()
-      val bits = graft.operators.Similarity.lshPairBitsForN(n)
-      val t0 = System.nanoTime()
-      val pairs = graft.operators.Similarity
-        .lshNearDupPairs(corpus, bits).cache()
-      val found = pairs
-        .where(col("id_b") - col("id_a") === PlantOffset &&
-               pmod(col("id_a"), lit(every)) === 0)
-        .count()
-      val total = pairs.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[lshplant] $label%-6s n=$n%-7d bits=$bits planted=$nPlanted%-5d " +
-        f"found=$found%5d/$nPlanted%-5d (${100.0 * found / nPlanted}%5.1f%%) " +
-        f"pairsOut=$total%6d $sec%7.2f s")
-      pairs.unpersist(); corpus.unpersist()
-    }
-    if (only.forall(_("lshplant"))) {
-      lshPlantTable(src, "1x")
-      lshPlantTable(dst, s"${factor}x")
-    }
-
-    // Containment size-predicate pricing: candidate pairs of the
-    // prefix×posting join WITH vs WITHOUT the lossless ns_b ≥ ⌈t·ns_a⌉
-    // cut (the r11 "What's wrong" item — a short doc's common-shingle
-    // prefix pairing against every holder). The final output is
-    // unchanged (the predicate is provably lossless; the oracle gate
-    // pins that); this table prices the survivor-volume drop the
-    // verify join no longer pays.
-    def containmentTable(dir: String, label: String): Unit = {
-      val docs = Tables.load(spark, dir, "documents")
-      def count(prune: Boolean): (Long, Double) = {
-        val t0 = System.nanoTime()
-        val c = graft.operators.Dedup
-          .containmentCandidates(docs, sizePrune = prune).count()
-        (c, (System.nanoTime() - t0) / 1e9)
-      }
-      val (unpruned, secU) = count(prune = false)
-      val (pruned, secP) = count(prune = true)
-      println(f"[containment] $label%-6s candidates unpruned=$unpruned%9d " +
-        f"($secU%6.2f s) pruned=$pruned%9d ($secP%6.2f s) " +
-        f"cut=${100.0 * (unpruned - pruned) / math.max(unpruned, 1L)}%5.1f%%")
-    }
-    if (only.forall(_("containment"))) {
-      containmentTable(src, "1x")
-      containmentTable(dst, s"${factor}x")
-    }
-
-    // KMV estimator quality at scale: sketch-estimated pairwise
-    // source Jaccard vs the exact self-join it replaces — the error
-    // should stay in the ~1/√k band while the exact side's cost grows
-    // with the shingle universe and the sketch side's pairwise stage
-    // stays sources×k.
-    def kmvTable(dir: String, label: String): Unit = {
-      val docs = Tables.load(spark, dir, "documents")
-      val t0 = System.nanoTime()
-      val est = graft.operators.TextAnalysis.overlapKmv(docs, 32)
-        .collect()
-        .map(r => ((r.getString(0), r.getString(1)), r.getDouble(2))).toMap
-      val secE = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      val vocab = docs.select(col("source"),
-          explode(graft.functions.Text.shingles3(col("text"))).as("sh"))
-        .distinct()
-      val sizes = vocab.groupBy("source").count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      val shared = vocab.as("a").join(vocab.as("b"),
-          col("a.sh") === col("b.sh") && col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("sa"), col("b.source").as("sb")).count()
-        .collect()
-        .map(r => ((r.getString(0), r.getString(1)), r.getLong(2))).toMap
-      val secX = (System.nanoTime() - t1) / 1e9
-      val errs = est.map { case (k, e) =>
-        val inter = shared.getOrElse(k, 0L).toDouble
-        val exact = inter / (sizes(k._1) + sizes(k._2) - inter)
-        math.abs(e - exact)
-      }
-      println(f"[kmv] $label%-6s pairs=${est.size}%4d " +
-        f"mae=${errs.sum / errs.size}%.4f maxerr=${errs.max}%.4f " +
-        f"time sketch=$secE%6.2f s exact=$secX%6.2f s")
-    }
-    if (only.forall(_("kmv"))) {
-      kmvTable(src, "1x")
-      kmvTable(dst, s"${factor}x")
-    }
-
-    // Adaptive-prefix execution check: at ≥30× the documents corpus
-    // passes 65 536 rows, so hashPrefixLenFor returns 3 — a 4 096-way
-    // bucket fan-out the gate corpora (≤ sf0.1) can never reach. Run
-    // the REAL len-for-n path on the replicated corpus and prove the
-    // positions equal the len=2 formulation on the same data (the
-    // prefix-key invariance PackingSpec pins at gate scale, now
-    // executed at the scale where the rule actually switches).
-    def packPrefixCheck(dir: String, label: String): Unit = {
-      val n = Tables.parquetRowCount(spark, s"$dir/documents.parquet")
-      val len = graft.operators.Packing.hashPrefixLenFor(n)
-      val docs = Tables.load(spark, dir, "documents")
-      val t0 = System.nanoTime()
-      val viaLen = graft.operators.Packing.globalShuffleRanked(docs, len)
-        .select(col("doc_id"), col("position").as("p_adaptive"))
-      val rows = viaLen.count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val viaTwo = graft.operators.Packing.globalShuffleRanked(docs, 2)
-        .select(col("doc_id"), col("position").as("p_len2"))
-      val diff = viaLen.join(viaTwo, "doc_id")
-        .where(col("p_adaptive") =!= col("p_len2")).count()
-      println(f"[packlen] $label%-6s n=$n%-8d prefixLen=$len " +
-        f"rows=$rows%-8d posDiffVsLen2=$diff $sec%7.2f s")
-    }
-    if (only.forall(_("packlen"))) {
-      packPrefixCheck(src, "1x")
-      packPrefixCheck(dst, s"${factor}x")
-    }
-    spark.stop()
+    } finally spark.stop()
   }
 }

@@ -8,9 +8,10 @@ import graft.operators.Similarity
   * behavioral contracts the gates can't — the bits regime rule, the
   * multi-probe recall buy (the fixture's near-orthogonal vectors are
   * SRP-LSH's adversarial case: exact probing recalls ~0.08, Hamming-2
-  * probing ~0.84 — SCALING.md has the full table), the identical-
-  * vector all-band collision folding to ONE candidate, and the
-  * map-only corpus side of the plan.
+  * probing ~0.84 — the round-11 table is in
+  * `git show ab6c630:SCALING.md`), the identical-vector all-band
+  * collision folding to ONE candidate, and the map-only corpus side
+  * of the plan.
   */
 class LshSearchSpec extends SparkSpec {
 

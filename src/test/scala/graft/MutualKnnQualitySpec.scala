@@ -10,10 +10,11 @@ import org.apache.spark.sql.functions.col
   * (pairwise cosine ≈0.96, ~orthogonal to everything else), forming
   * ground-truth classes of 3 over a diffuse background (cosines
   * 0.45–0.6). See ClusterQuality for the metric definitions and
-  * SCALING.md for the measured 1×/10× table these bounds are cut
-  * from (completeness ≈0.93–0.94, intact ≈0.82–0.88 at both scales;
-  * plantedPurity ≈0.97 at k=2 vs ≈0.42 at k=3 — k−(group−1) spare
-  * neighbor slots are where background intruders enter).
+  * the round-11 1×/10× table (`git show ab6c630:SCALING.md`) these
+  * bounds are cut from (completeness ≈0.93–0.94, intact ≈0.82–0.88
+  * at both scales; plantedPurity ≈0.97 at k=2 vs ≈0.42 at k=3 —
+  * k−(group−1) spare neighbor slots are where background intruders
+  * enter).
   */
 class MutualKnnQualitySpec extends SparkSpec {
 

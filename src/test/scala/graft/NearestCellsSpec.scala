@@ -122,8 +122,8 @@ class NearestCellsSpec extends SparkSpec {
     // ~40 % of fixture vectors land in a different (second-best) cell
     // than the flat argmax picks, but corpus and queries shift
     // coherently, so top-5 SEARCH recall holds (measured 90–100 % at
-    // 1×/10× — SCALING.md round-11 twolevel table). Floor it on the
-    // sf0.001 fixtures against brute force.
+    // 1×/10× — round-11 twolevel table, `git show ab6c630:SCALING.md`).
+    // Floor it on the sf0.001 fixtures against brute force.
     val dir = "/root/testdata/sf0.001"
     val truth = graft.SparkEntry.queries("sim_brute_force")(spark, dir)
       .select("q_id", "neighbor_id").collect()

@@ -48,6 +48,41 @@ class R15KernelsSpec extends SparkSpec {
       "RemoveIntervals diverged from the HOF twin")
   }
 
+  test("RemoveIntervals kernel == the HOF twin on nulls, compiled and interpreted") {
+    import org.apache.spark.sql.Row
+    def iv(s: Integer, e: Integer) = Row(s, e)
+    val rows = Seq(
+      Row(null, Seq(iv(1, 2))),                               // null token array
+      Row(Seq("a", "b"), null),                               // null interval list
+      Row(Seq.empty[String], null),
+      Row(Seq("a", "b", "c"), Seq(null)),                     // null interval
+      Row(Seq("a", "b", "c", "d"), Seq(iv(null, 2))),         // null start
+      Row(Seq("a", "b", "c", "d"), Seq(iv(3, null), iv(1, 1))), // null end
+      Row(Seq("a", null, "c"), Seq(iv(3, 3))),                // null token survives
+      Row(Seq(null, "b"), Seq(iv(1, 1))),                     // null token removed
+      Row(Seq("a", "b", "c", "d"), Seq(iv(3, 1), iv(2, 2))),  // reversed: covers nothing
+      Row(Seq("a", "b", "c"), Seq(iv(2, Int.MaxValue), iv(1, 1))))
+    // an RDD-backed frame, so the optimizer cannot fold the kernel
+    // into a local relation before execution
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "toks array<string>, ivs array<struct<s:int,e:int>>"))
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+    val saved = keys.map(spark.conf.getOption)
+    try Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false").foreach {
+      case (mode, wholeStage) =>
+        spark.conf.set(keys(0), mode)
+        spark.conf.set(keys(1), wholeStage)
+        val out = df.select(
+          RemoveIntervals.removeIntervals($"toks", $"ivs").as("fast"),
+          Dedup.removeIntervalsViaHof($"toks", $"ivs").as("slow")).collect()
+        val diverged = out.filterNot(r => r.get(0) == r.get(1))
+        assert(diverged.isEmpty, s"$mode: kernel vs twin: ${diverged.mkString(", ")}")
+    } finally keys.zip(saved).foreach {
+      case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   test("verbatimRewrite rows are unchanged by the kernel swap (fixture)") {
     // end-to-end: rebuild the r14 spelling of the rewrite tail over
     // the same interval frame and compare entire output rows

@@ -11,22 +11,15 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  /** Catalog tables land in a fresh warehouse per test JVM, deleted at
-    * exit: the in-memory catalog forgets tables between JVMs, and a
-    * shared repo-local warehouse kept every `*_spec` table directory
-    * for the next run to trip over. */
-  private lazy val warehouse: java.io.File = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-test-warehouse")
-      .toFile
-    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
-    dir
-  }
-
+  /** Catalog tables land in the per-JVM temp warehouse the mains use
+    * ([[LocalSession.tempWarehouse]]), deleted at exit: a shared
+    * repo-local warehouse kept every `*_spec` table directory for the
+    * next run to trip over. */
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.warehouse.dir", warehouse.getAbsolutePath)
+      .config("spark.sql.warehouse.dir", LocalSession.tempWarehouse)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * The synthetic embeddings have almost no tight duplicate structure
   * (background cosines sit at 0.45–0.6), so ground truth is PLANTED,
-  * exactly like ScaleProbe's tight-pair recall table: every
+  * as in IvfRecallSpec's planted-copy recall: every
   * `every`-th vector gains `copies` deterministic near-copies
   * (v + 0.2·shiftⱼ(v), pairwise cosine ≈0.96 within the group, ≈
   * background to everything else). Each planted group is one
@@ -34,7 +34,8 @@ import org.apache.spark.sql.functions._
 object ClusterQuality {
 
   /** Copy j of source id s gets vec_id = s + j·PlantOffset — beyond
-    * any replica key (ScaleProbe replica ids reach ~9.0003e8), so
+    * any replica key (`ScaleProbe.replicate` offsets replica i by
+    * i·1e8), so
     * `vec_id % PlantOffset` recovers the ground-truth class for
     * planted members and is the identity for background vectors. */
   val PlantOffset = 10000000000L
