@@ -61,9 +61,7 @@ case class ClassifierMeanW(child: Expression, weights: Array[Double])
     val wTerm =
       if (weights == null) "((double[]) null)"
       else ctx.addReferenceObj("classifierWeights", weights, "double[]")
-    defineCodeGen(ctx, ev, c =>
-      s"${ClassifierMeanWKernel.getClass.getName.stripSuffix("$")}" +
-        s".compute($c, $wTerm)")
+    defineCodeGen(ctx, ev, c => computeCall(ClassifierMeanWKernel, c, wTerm))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

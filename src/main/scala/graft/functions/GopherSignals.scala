@@ -21,9 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * [[graft.operators.TextAnalysis.qTextGopherRules]] derives its flag
   * booleans from these counters with the SAME builtin arithmetic as
   * before; only the counter computation moved into the kernel. The
-  * builtin composition it replaces is kept as
-  * [[graft.operators.TextAnalysis.gopherSignalsViaHof]] and pinned
-  * equal in R15KernelsSpec. The motivating term is top_cnt: the HOF
+  * builtin composition it replaces is the test-side twin
+  * `gopherSignalsViaHof`, pinned equal in KernelContractSpec. The
+  * motivating term is top_cnt: the HOF
   * spelling is `array_max(transform(array_distinct(toks), d ->
   * size(filter(toks, x -> x = d))))` — O(distinct · n) interpreted
   * lambda dispatch per document (r14 verdict item 7, a latent cost
@@ -43,8 +43,7 @@ case class GopherSignalsExpr(child: Expression) extends UnaryExpression {
     GopherSignals.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${GopherSignals.getClass.getName.stripSuffix("$")}.compute($c)")
+    defineCodeGen(ctx, ev, c => computeCall(GopherSignals, c))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the previous plan exploded every (doc, shingle) pair and recovered
   * the per-doc minima + the distinct-shingle set through a
   * corpus-wide ObjectHashAggregate shuffle — but the shingle array is
-  * already distinct per row ([[Shingles3]]), so the whole signature
+  * already distinct per row ([[ShinglesW]]), so the whole signature
   * is a per-row projection. Same md5 count, zero exchange, and the
   * stage stays in whole-stage codegen (the kernel is a static call,
   * the SimHash64 pattern).
@@ -45,13 +45,8 @@ case class MinHash8(child: Expression) extends UnaryExpression {
     MinHashes.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val kernel = MinHashes.getClass.getName.stripSuffix("$")
-      s"""
-         |${ev.value} = $kernel.compute($c);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = ${computeCall(MinHashes, c)}; ${ev.isNull} = ${ev.value} == null;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -95,28 +90,31 @@ object MinHashes {
   }
 
   /** Static kernel shared by interpreted eval and generated code.
-    * Returns null for an empty shingle array (no shingles → no
+    * Null elements are skipped, as `min` skips the null md5 of a null
+    * shingle. Returns null when no shingle is left (no shingles → no
     * signature; callers filter those docs out exactly as the exploded
     * plan dropped them). */
   def compute(shingles: ArrayData): GenericArrayData = {
     val n = shingles.numElements()
-    if (n == 0) return null
     val md = localMd5.get()
     val mins = new Array[Array[Byte]](Seeds)
     var i = 0
     while (i < n) {
-      val sh = shingles.getUTF8String(i).getBytes
-      var j = 0
-      while (j < Seeds) {
-        md.reset()
-        md.update(seedPrefixes(j))
-        md.update(sh)
-        val digest = md.digest()
-        if (mins(j) == null || lessThan(digest, mins(j))) mins(j) = digest
-        j += 1
+      if (!shingles.isNullAt(i)) {
+        val sh = shingles.getUTF8String(i).getBytes
+        var j = 0
+        while (j < Seeds) {
+          md.reset()
+          md.update(seedPrefixes(j))
+          md.update(sh)
+          val digest = md.digest()
+          if (mins(j) == null || lessThan(digest, mins(j))) mins(j) = digest
+          j += 1
+        }
       }
       i += 1
     }
+    if (mins(0) == null) return null
     val out = new Array[Any](Seeds)
     var j = 0
     while (j < Seeds) { out(j) = hex(mins(j)); j += 1 }

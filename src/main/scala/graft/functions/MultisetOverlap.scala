@@ -12,15 +12,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * two string-array columns — the token-F1 reward kernel
   * ([[graft.operators.EvalScoring]]).
   *
-  * Semantically identical to the higher-order composition kept as
-  * [[graft.operators.EvalScoring.multisetOverlapViaHof]] (tag → sort
-  * → one aggregate fold), and checked against it in
-  * MultisetOverlapSpec, but that chain interprets two `transform`
+  * Semantically identical to the higher-order composition (tag → sort
+  * → one aggregate fold) that the test-side twin `multisetOverlapViaHof`
+  * spells out and R14KernelsSpec checks it against, but that chain
+  * interprets two `transform`
   * lambdas, a struct comparator sort, and a 4-field struct fold per
   * element — measured at ~4.5 s of the 6 s eval_preference_pairs
   * bench row. This expression builds one hash map over the shorter
   * side and walks the other — O(L) per row, one static-kernel call,
-  * stage stays in whole-stage codegen (the Shingles3 pattern).
+  * stage stays in whole-stage codegen (the ShinglesW pattern).
   *
   * Token arrays contain no nulls ([[Text.tokens]] filters empties and
   * never emits null); a null ELEMENT would be a caller bug and is
@@ -50,8 +50,7 @@ case class MultisetOverlapExpr(left: Expression, right: Expression)
       r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"${MultisetOverlap.getClass.getName.stripSuffix("$")}.compute($a, $b)")
+    defineCodeGen(ctx, ev, (a, b) => computeCall(MultisetOverlap, a, b))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

@@ -2,10 +2,10 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Map-only coarse-quantizer assignment: the `keep` nearest centroids
   * of a vector, by cosine similarity against a driver-held centroid
@@ -24,11 +24,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, L
   * object (one broadcast of the task binary per stage — the same
   * transport a broadcast-hash join would use for the same bytes).
   *
-  * Per-pair arithmetic is bit-identical to [[CosineSimilarity]]: one
-  * double loop in array order accumulating dot/na/nb, `0.0` on a zero
-  * denominator. Identical bits in → identical ranks out, which is what
-  * lets the ten sim and embedding-dedup oracle gates stay hash-green
-  * across the plan change.
+  * Per-pair arithmetic is [[CosineSimilarity.compute]] itself, with
+  * the centroids held as double array data. Identical bits in →
+  * identical ranks out, which is what lets the ten sim and
+  * embedding-dedup oracle gates stay hash-green across the plan
+  * change.
   *
   * Output: `array<long>` of centroid ids, best first, length
   * `min(keep, numCentroids)`. Centroid ids must be strictly ascending
@@ -46,99 +46,19 @@ case class NearestCells(child: Expression, cIds: Array[Long],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "nearest_cells"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an array<float|double> vector, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkFloatVector(prettyName, child)
 
-  private def isDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
+  @transient private lazy val cells = NearestCells.asArrayData(cVecs)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nv = v.numElements()
-    val c = cVecs.length
-    val k = math.min(keep, c)
-    val sims = new Array[Double](k)
-    val ids = new Array[Long](k)
-    var m = 0
-    var j = 0
-    while (j < c) {
-      val cv = cVecs(j)
-      val n = math.min(nv, cv.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
-        val y = cv(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      val sim = if (denom == 0.0) 0.0 else dot / denom
-      // sorted-desc insertion; strict > keeps the earlier (lower) id
-      // on ties because ids are ascending
-      var pos = m
-      while (pos > 0 && sim > sims(pos - 1)) pos -= 1
-      if (pos < k) {
-        val end = math.min(m, k - 1)
-        var t = end
-        while (t > pos) { sims(t) = sims(t - 1); ids(t) = ids(t - 1); t -= 1 }
-        sims(pos) = sim; ids(pos) = cIds(j)
-        if (m < k) m += 1
-      }
-      j += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(ids, m))
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestCells.compute(input.asInstanceOf[ArrayData], isDouble(child), cIds, cells, keep)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idsRef = ctx.addReferenceObj("cellIds", cIds, "long[]")
-    val vecsRef = ctx.addReferenceObj("cellVecs", cVecs, "double[][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val k = math.min(keep, cVecs.length)
-      val nv = ctx.freshName("nv"); val j = ctx.freshName("j")
-      val cv = ctx.freshName("cv"); val n = ctx.freshName("n")
-      val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val denom = ctx.freshName("denom"); val sim = ctx.freshName("sim")
-      val sims = ctx.freshName("sims"); val ids = ctx.freshName("ids")
-      val m = ctx.freshName("m"); val pos = ctx.freshName("pos")
-      val end = ctx.freshName("end"); val t = ctx.freshName("t")
-      val get = if (isDouble) s"$v.getDouble($i)" else s"(double) $v.getFloat($i)"
-      s"""
-         |int $nv = $v.numElements();
-         |double[] $sims = new double[$k];
-         |long[] $ids = new long[$k];
-         |int $m = 0;
-         |for (int $j = 0; $j < ${cVecs.length}; $j++) {
-         |  double[] $cv = $vecsRef[$j];
-         |  int $n = java.lang.Math.min($nv, $cv.length);
-         |  double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $x = $get;
-         |    double $y = $cv[$i];
-         |    $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |  }
-         |  double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |  double $sim = ($denom == 0.0) ? 0.0 : $dot / $denom;
-         |  int $pos = $m;
-         |  while ($pos > 0 && $sim > $sims[$pos - 1]) $pos--;
-         |  if ($pos < $k) {
-         |    int $end = java.lang.Math.min($m, $k - 1);
-         |    for (int $t = $end; $t > $pos; $t--) {
-         |      $sims[$t] = $sims[$t - 1]; $ids[$t] = $ids[$t - 1];
-         |    }
-         |    $sims[$pos] = $sim; $ids[$pos] = $idsRef[$j];
-         |    if ($m < $k) $m++;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($ids, $m));
-       """.stripMargin
-    })
+    val ids = ctx.addReferenceObj("cellIds", cIds, "long[]")
+    val vecs = ctx.addReferenceObj("cellVecs", cells, NearestCells.ArrayDataArray)
+    defineCodeGen(ctx, ev, v =>
+      computeCall(NearestCells, v, isDouble(child), ids, vecs, keep))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -168,8 +88,8 @@ case class NearestCells(child: Expression, cIds: Array[Long],
   * (a pSuper-way merge on the per-super ascending lists), so the
   * strict-`>` insertion keeps the lower id on similarity ties —
   * bit-identical tie semantics to the flat scan, independent of which
-  * supers were probed. Per-pair arithmetic is the same dot/na/nb loop
-  * as [[NearestCells]] / [[CosineSimilarity]].
+  * supers were probed. Per-pair arithmetic is
+  * [[CosineSimilarity.compute]], as in [[NearestCells]].
   */
 case class NearestCellsTwoLevel(child: Expression,
                                 superVecs: Array[Array[Double]],
@@ -186,182 +106,109 @@ case class NearestCellsTwoLevel(child: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "nearest_cells_2level"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an array<float|double> vector, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkFloatVector(prettyName, child)
 
-  private def isDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
+  @transient private lazy val supers = NearestCells.asArrayData(superVecs)
+  @transient private lazy val members = memberVecs.map(NearestCells.asArrayData)
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nv = v.numElements()
-    def simTo(cv: Array[Double]): Double = {
-      val n = math.min(nv, cv.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) {
-        val x = if (isDouble) v.getDouble(i) else v.getFloat(i).toDouble
-        val y = cv(i)
-        dot += x * y; na += x * x; nb += y * y; i += 1
-      }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
-    // level 1: top-pSuper super-cells (strict > keeps lower index on
-    // ties — supers are in index order)
-    val nS = superVecs.length
-    val pS = math.min(pSuper, nS)
-    val sSims = new Array[Double](pS)
-    val sIdx = new Array[Int](pS)
-    var mS = 0
-    var s = 0
-    while (s < nS) {
-      val sim = simTo(superVecs(s))
-      var pos = mS
-      while (pos > 0 && sim > sSims(pos - 1)) pos -= 1
-      if (pos < pS) {
-        val end = math.min(mS, pS - 1)
-        var t = end
-        while (t > pos) { sSims(t) = sSims(t - 1); sIdx(t) = sIdx(t - 1); t -= 1 }
-        sSims(pos) = sim; sIdx(pos) = s
-        if (mS < pS) mS += 1
-      }
-      s += 1
-    }
-    // level 2: pS-way merge over the selected supers' ascending member
-    // lists, scoring in globally ascending id order
-    val k = keep
-    val sims = new Array[Double](k)
-    val ids = new Array[Long](k)
-    var m = 0
-    val ptr = new Array[Int](mS)
-    var remaining = 0
-    var t0 = 0
-    while (t0 < mS) { remaining += memberIds(sIdx(t0)).length; t0 += 1 }
-    while (remaining > 0) {
-      var best = -1
-      var bestId = Long.MaxValue
-      var t = 0
-      while (t < mS) {
-        val li = sIdx(t)
-        if (ptr(t) < memberIds(li).length && memberIds(li)(ptr(t)) < bestId) {
-          bestId = memberIds(li)(ptr(t)); best = t
-        }
-        t += 1
-      }
-      val li = sIdx(best)
-      val sim = simTo(memberVecs(li)(ptr(best)))
-      ptr(best) += 1; remaining -= 1
-      var pos = m
-      while (pos > 0 && sim > sims(pos - 1)) pos -= 1
-      if (pos < k) {
-        val end = math.min(m, k - 1)
-        var u = end
-        while (u > pos) { sims(u) = sims(u - 1); ids(u) = ids(u - 1); u -= 1 }
-        sims(pos) = sim; ids(pos) = bestId
-        if (m < k) m += 1
-      }
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(ids, m))
-  }
+  override def nullSafeEval(input: Any): Any =
+    NearestCellsTwoLevel.compute(input.asInstanceOf[ArrayData], isDouble(child),
+      supers, memberIds, members, pSuper, keep)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val sVecsRef = ctx.addReferenceObj("superVecs", superVecs, "double[][]")
-    val mIdsRef = ctx.addReferenceObj("memberIds", memberIds, "long[][]")
-    val mVecsRef = ctx.addReferenceObj("memberVecs", memberVecs, "double[][][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val nS = superVecs.length
-      val pS = math.min(pSuper, nS)
-      // one shared scoring routine via a private method on the
-      // generated class keeps the two loops from duplicating the
-      // cosine kernel; addNewFunction may qualify the name (inner
-      // class spill) — call through the returned reference
-      val simFnName = ctx.freshName("simTo")
-      val simFn = ctx.addNewFunction(simFnName,
-        s"""
-           |private double $simFnName(org.apache.spark.sql.catalyst.util.ArrayData v, double[] cv, int nv) {
-           |  int n = java.lang.Math.min(nv, cv.length);
-           |  double dot = 0.0; double na = 0.0; double nb = 0.0;
-           |  for (int i = 0; i < n; i++) {
-           |    double x = ${if (isDouble) "v.getDouble(i)" else "(double) v.getFloat(i)"};
-           |    double y = cv[i];
-           |    dot += x * y; na += x * x; nb += y * y;
-           |  }
-           |  double denom = java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb);
-           |  return (denom == 0.0) ? 0.0 : dot / denom;
-           |}
-         """.stripMargin)
-      val nvv = ctx.freshName("nvv")
-      val sSims = ctx.freshName("sSims"); val sIdx = ctx.freshName("sIdx")
-      val mS = ctx.freshName("mS"); val sim = ctx.freshName("sim")
-      val pos = ctx.freshName("pos"); val end = ctx.freshName("end")
-      val sims = ctx.freshName("sims"); val ids = ctx.freshName("ids")
-      val m = ctx.freshName("m"); val ptr = ctx.freshName("ptr")
-      val remaining = ctx.freshName("remaining")
-      val best = ctx.freshName("best"); val bestId = ctx.freshName("bestId")
-      val li = ctx.freshName("li")
-      s"""
-         |int $nvv = $v.numElements();
-         |double[] $sSims = new double[$pS];
-         |int[] $sIdx = new int[$pS];
-         |int $mS = 0;
-         |for (int s = 0; s < $nS; s++) {
-         |  double $sim = $simFn($v, $sVecsRef[s], $nvv);
-         |  int $pos = $mS;
-         |  while ($pos > 0 && $sim > $sSims[$pos - 1]) $pos--;
-         |  if ($pos < $pS) {
-         |    int $end = java.lang.Math.min($mS, $pS - 1);
-         |    for (int t = $end; t > $pos; t--) {
-         |      $sSims[t] = $sSims[t - 1]; $sIdx[t] = $sIdx[t - 1];
-         |    }
-         |    $sSims[$pos] = $sim; $sIdx[$pos] = s;
-         |    if ($mS < $pS) $mS++;
-         |  }
-         |}
-         |double[] $sims = new double[$keep];
-         |long[] $ids = new long[$keep];
-         |int $m = 0;
-         |int[] $ptr = new int[$mS];
-         |int $remaining = 0;
-         |for (int t = 0; t < $mS; t++) $remaining += $mIdsRef[$sIdx[t]].length;
-         |while ($remaining > 0) {
-         |  int $best = -1;
-         |  long $bestId = Long.MAX_VALUE;
-         |  for (int t = 0; t < $mS; t++) {
-         |    int $li = $sIdx[t];
-         |    if ($ptr[t] < $mIdsRef[$li].length && $mIdsRef[$li][$ptr[t]] < $bestId) {
-         |      $bestId = $mIdsRef[$li][$ptr[t]]; $best = t;
-         |    }
-         |  }
-         |  double $sim = $simFn($v, $mVecsRef[$sIdx[$best]][$ptr[$best]], $nvv);
-         |  $ptr[$best]++; $remaining--;
-         |  int $pos = $m;
-         |  while ($pos > 0 && $sim > $sims[$pos - 1]) $pos--;
-         |  if ($pos < $keep) {
-         |    int $end = java.lang.Math.min($m, $keep - 1);
-         |    for (int u = $end; u > $pos; u--) {
-         |      $sims[u] = $sims[u - 1]; $ids[u] = $ids[u - 1];
-         |    }
-         |    $sims[$pos] = $sim; $ids[$pos] = $bestId;
-         |    if ($m < $keep) $m++;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($ids, $m));
-       """.stripMargin
-    })
+    val sRef = ctx.addReferenceObj("superVecs", supers, NearestCells.ArrayDataArray)
+    val idsRef = ctx.addReferenceObj("memberIds", memberIds, "long[][]")
+    val vecsRef = ctx.addReferenceObj("memberVecs", members,
+      NearestCells.ArrayDataArray + "[]")
+    defineCodeGen(ctx, ev, v => computeCall(NearestCellsTwoLevel, v,
+      isDouble(child), sRef, idsRef, vecsRef, pSuper, keep))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object NearestCellsTwoLevel {
+
+  /** Level 1 keeps the `pSuper` nearest super-cells (ties to the lower
+    * index); level 2 merges the probed supers' ascending member lists
+    * and scores their cells in globally ascending id order. */
+  def compute(v: ArrayData, vDouble: Boolean, supers: Array[ArrayData],
+              memberIds: Array[Array[Long]], memberVecs: Array[Array[ArrayData]],
+              pSuper: Int, keep: Int): ArrayData = {
+    val probe = new TopK(pSuper)
+    var s = 0
+    while (s < supers.length) {
+      probe.offer(CosineSimilarity.compute(v, vDouble, supers(s), true), s)
+      s += 1
+    }
+    val mS = probe.size
+    val top = new TopK(keep)
+    val ptr = new Array[Int](mS)
+    var remaining = 0
+    var t = 0
+    while (t < mS) { remaining += memberIds(probe.ids(t).toInt).length; t += 1 }
+    while (remaining > 0) {
+      var best = -1
+      var bestId = Long.MaxValue
+      t = 0
+      while (t < mS) {
+        val ids = memberIds(probe.ids(t).toInt)
+        if (ptr(t) < ids.length && ids(ptr(t)) < bestId) { bestId = ids(ptr(t)); best = t }
+        t += 1
+      }
+      val cell = memberVecs(probe.ids(best).toInt)(ptr(best))
+      top.offer(CosineSimilarity.compute(v, vDouble, cell, true), bestId)
+      ptr(best) += 1; remaining -= 1
+    }
+    top.result
+  }
+}
+
+/** The `k` best (similarity, id) offers, best first. Sorted-desc
+  * insertion with strict `>`: of equal similarities the earlier offer
+  * stays ahead, so offering in ascending id order breaks ties to the
+  * lower id. */
+private[functions] final class TopK(k: Int) {
+  private val sims = new Array[Double](k)
+  val ids = new Array[Long](k)
+  var size = 0
+
+  def offer(sim: Double, id: Long): Unit = {
+    var pos = size
+    while (pos > 0 && sim > sims(pos - 1)) pos -= 1
+    if (pos < k) {
+      var t = math.min(size, k - 1)
+      while (t > pos) { sims(t) = sims(t - 1); ids(t) = ids(t - 1); t -= 1 }
+      sims(pos) = sim; ids(pos) = id
+      if (size < k) size += 1
+    }
+  }
+
+  def result: ArrayData = new GenericArrayData(java.util.Arrays.copyOf(ids, size))
+}
+
 object NearestCells {
   import org.apache.spark.sql.graft.ColumnBridge
+
+  /** The `keep` nearest of the centroids `vecs` (ids ascending). */
+  def compute(v: ArrayData, vDouble: Boolean, ids: Array[Long],
+              vecs: Array[ArrayData], keep: Int): ArrayData = {
+    val top = new TopK(keep)
+    var j = 0
+    while (j < vecs.length) {
+      top.offer(CosineSimilarity.compute(v, vDouble, vecs(j), true), ids(j))
+      j += 1
+    }
+    top.result
+  }
+
+  /** Centroids as double-array data, the form the cosine loop reads. */
+  private[functions] def asArrayData(vecs: Array[Array[Double]]): Array[ArrayData] =
+    vecs.map(UnsafeArrayData.fromPrimitiveArray(_): ArrayData)
+
+  private[functions] val ArrayDataArray = classOf[ArrayData].getName + "[]"
 
   /** Probed super-cells for the two-level variant: max(2, ⌈c^¼⌉) —
     * grows as the fourth root, so the probed fraction of the space
@@ -425,20 +272,14 @@ object NearestCells {
     val c = sorted.length
     val nSuper = math.ceil(math.sqrt(c.toDouble)).toInt
     val supers = sorted.take(nSuper).map(_._2)
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      val n = math.min(a.length, b.length)
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < n) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      if (denom == 0.0) 0.0 else dot / denom
-    }
+    val vecs = asArrayData(sorted.map(_._2))
     val members = Array.fill(nSuper)(Vector.newBuilder[Int])
     var j = 0
     while (j < c) {
       var bestS = 0; var bestSim = Double.NegativeInfinity
       var s = 0
       while (s < nSuper) {
-        val sim = cos(sorted(j)._2, supers(s))
+        val sim = CosineSimilarity.compute(vecs(j), true, vecs(s), true)
         if (sim > bestSim) { bestSim = sim; bestS = s }
         s += 1
       }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Product-quantization encode+reconstruct, fused: the vector is cut
   * into `numSub` contiguous subspaces of `dSub` dims; each slice is
@@ -48,89 +48,18 @@ case class PqRecon(child: Expression, codewords: Array[Array[Array[Double]]],
     "every subspace needs at least one codeword")
   require(dSub >= 1, s"dSub must be >= 1, got $dSub")
 
-  private def numSub: Int = codewords.length
-
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "pq_recon"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an array<float|double> vector, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkFloatVector(prettyName, child)
 
-  private def isDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nv = v.numElements()
-    val out = new Array[Double](numSub * dSub)
-    var m = 0
-    while (m < numSub) {
-      val base = m * dSub
-      val cb = codewords(m)
-      var bestJ = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < cb.length) {
-        val cw = cb(j)
-        var d = 0.0
-        var i = 0
-        val n = math.min(dSub, math.max(0, nv - base))
-        while (i < n) {
-          val x = (if (isDouble) v.getDouble(base + i)
-                   else v.getFloat(base + i).toDouble) - cw(i)
-          d += x * x
-          i += 1
-        }
-        // strict < keeps the earlier (lower-id) codeword on ties
-        if (d < bestD) { bestD = d; bestJ = j }
-        j += 1
-      }
-      System.arraycopy(cb(bestJ), 0, out, base, dSub)
-      m += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqRecon.compute(input.asInstanceOf[ArrayData], isDouble(child), codewords, dSub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodewords", codewords, "double[][][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val nv = ctx.freshName("nv"); val out = ctx.freshName("out")
-      val m = ctx.freshName("m"); val base = ctx.freshName("base")
-      val cb = ctx.freshName("cb"); val bestJ = ctx.freshName("bestJ")
-      val bestD = ctx.freshName("bestD"); val j = ctx.freshName("j")
-      val cw = ctx.freshName("cw"); val d = ctx.freshName("d")
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val x = ctx.freshName("x")
-      val get = if (isDouble) s"$v.getDouble($base + $i)"
-                else s"(double) $v.getFloat($base + $i)"
-      s"""
-         |int $nv = $v.numElements();
-         |double[] $out = new double[${numSub * dSub}];
-         |for (int $m = 0; $m < $numSub; $m++) {
-         |  int $base = $m * $dSub;
-         |  double[][] $cb = $cbRef[$m];
-         |  int $bestJ = 0;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $j = 0; $j < $cb.length; $j++) {
-         |    double[] $cw = $cb[$j];
-         |    double $d = 0.0;
-         |    int $n = java.lang.Math.min($dSub, java.lang.Math.max(0, $nv - $base));
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $x = $get - $cw[$i];
-         |      $d += $x * $x;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $bestJ = $j; }
-         |  }
-         |  System.arraycopy($cb[$bestJ], 0, $out, $base, $dSub);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val cb = ctx.addReferenceObj("pqCodewords", codewords, "double[][][]")
+    defineCodeGen(ctx, ev, v => computeCall(PqRecon, v, isDouble(child), cb, dSub))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -140,8 +69,9 @@ case class PqRecon(child: Expression, codewords: Array[Array[Array[Double]]],
 /** Product-quantization ENCODE alone: the per-subspace argmin
   * codeword POSITIONS (0-based, in ascending-codebook-id order) as an
   * `array<int>` — what a persisted PQ index actually stores (4 bits
-  * each at 16 codewords; int here, the storage layer packs). Same
-  * distance loop and tie rule as [[PqRecon]] — PqReconSpec pins that
+  * each at 16 codewords; int here, the storage layer packs). PqRecon
+  * reconstructs from these very codes ([[PqCodes.codes]]); PqReconSpec
+  * pins that
   * decoding these codes through the codebook reproduces PqRecon's
   * reconstruction exactly, which is what lets the indexed gates share
   * the recompute gates' oracles. */
@@ -152,97 +82,80 @@ case class PqCodes(child: Expression, codewords: Array[Array[Array[Double]]],
     "every subspace needs at least one codeword")
   require(dSub >= 1, s"dSub must be >= 1, got $dSub")
 
-  private def numSub: Int = codewords.length
-
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.IntegerType, containsNull = false)
   override def prettyName: String = "pq_codes"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects an array<float|double> vector, got ${t.catalogString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    VectorFunctions.checkFloatVector(prettyName, child)
 
-  private def isDouble: Boolean = child.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nv = v.numElements()
-    val out = new Array[Int](numSub)
-    var m = 0
-    while (m < numSub) {
-      val base = m * dSub
-      val cb = codewords(m)
-      var bestJ = 0
-      var bestD = Double.MaxValue
-      var j = 0
-      while (j < cb.length) {
-        val cw = cb(j)
-        var d = 0.0
-        var i = 0
-        val n = math.min(dSub, math.max(0, nv - base))
-        while (i < n) {
-          val x = (if (isDouble) v.getDouble(base + i)
-                   else v.getFloat(base + i).toDouble) - cw(i)
-          d += x * x
-          i += 1
-        }
-        if (d < bestD) { bestD = d; bestJ = j }
-        j += 1
-      }
-      out(m) = bestJ
-      m += 1
-    }
-    new GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any =
+    PqCodes.compute(input.asInstanceOf[ArrayData], isDouble(child), codewords, dSub)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cbRef = ctx.addReferenceObj("pqCodewords", codewords, "double[][][]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val nv = ctx.freshName("nv"); val out = ctx.freshName("out")
-      val m = ctx.freshName("m"); val base = ctx.freshName("base")
-      val cb = ctx.freshName("cb"); val bestJ = ctx.freshName("bestJ")
-      val bestD = ctx.freshName("bestD"); val j = ctx.freshName("j")
-      val cw = ctx.freshName("cw"); val d = ctx.freshName("d")
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val x = ctx.freshName("x")
-      val get = if (isDouble) s"$v.getDouble($base + $i)"
-                else s"(double) $v.getFloat($base + $i)"
-      s"""
-         |int $nv = $v.numElements();
-         |int[] $out = new int[$numSub];
-         |for (int $m = 0; $m < $numSub; $m++) {
-         |  int $base = $m * $dSub;
-         |  double[][] $cb = $cbRef[$m];
-         |  int $bestJ = 0;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $j = 0; $j < $cb.length; $j++) {
-         |    double[] $cw = $cb[$j];
-         |    double $d = 0.0;
-         |    int $n = java.lang.Math.min($dSub, java.lang.Math.max(0, $nv - $base));
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      double $x = $get - $cw[$i];
-         |      $d += $x * $x;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $bestJ = $j; }
-         |  }
-         |  $out[$m] = $bestJ;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val cb = ctx.addReferenceObj("pqCodewords", codewords, "double[][][]")
+    defineCodeGen(ctx, ev, v => computeCall(PqCodes, v, isDouble(child), cb, dSub))
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object PqCodes {
+
+  def compute(v: ArrayData, vDouble: Boolean,
+              codewords: Array[Array[Array[Double]]], dSub: Int): ArrayData =
+    new GenericArrayData(codes(v, vDouble, codewords, dSub))
+
+  /** THE per-subspace argmin: for each subspace m, the position of the
+    * codeword nearest (squared L2) to `v`'s slice [m·dSub, (m+1)·dSub),
+    * compared on the slice's overlap with `v`; strict `<` keeps the
+    * earlier (lower-id) codeword on ties. */
+  private[functions] def codes(v: ArrayData, vDouble: Boolean,
+                               codewords: Array[Array[Array[Double]]],
+                               dSub: Int): Array[Int] = {
+    val nv = v.numElements()
+    val out = new Array[Int](codewords.length)
+    var m = 0
+    while (m < codewords.length) {
+      val base = m * dSub
+      val n = math.min(dSub, math.max(0, nv - base))
+      val cb = codewords(m)
+      var bestD = Double.MaxValue
+      var j = 0
+      while (j < cb.length) {
+        val cw = cb(j)
+        var d = 0.0
+        var i = 0
+        while (i < n) {
+          val x = elem(v, vDouble, base + i) - cw(i)
+          d += x * x
+          i += 1
+        }
+        if (d < bestD) { bestD = d; out(m) = j }
+        j += 1
+      }
+      m += 1
+    }
+    out
+  }
+}
+
 object PqRecon {
   import org.apache.spark.sql.graft.ColumnBridge
+
+  /** The nearest codewords of [[PqCodes]], concatenated. */
+  def compute(v: ArrayData, vDouble: Boolean,
+              codewords: Array[Array[Array[Double]]], dSub: Int): ArrayData = {
+    val codes = PqCodes.codes(v, vDouble, codewords, dSub)
+    val out = new Array[Double](codes.length * dSub)
+    var m = 0
+    while (m < codes.length) {
+      System.arraycopy(codewords(m)(codes(m)), 0, out, m * dSub, dSub)
+      m += 1
+    }
+    new GenericArrayData(out)
+  }
 
   /** Column form over a driver-collected codebook: `(id, vector)`
     * pairs (any order; sorted ascending by id here — the tie-break

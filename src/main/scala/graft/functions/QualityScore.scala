@@ -34,8 +34,7 @@ case class QualityScoreExpr(child: Expression) extends UnaryExpression {
     QualityScore.compute(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${QualityScore.getClass.getName.stripSuffix("$")}.compute($c)")
+    defineCodeGen(ctx, ev, c => computeCall(QualityScore, c))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

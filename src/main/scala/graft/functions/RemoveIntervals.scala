@@ -14,10 +14,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType,
   * [s, e] interval of the second argument — the rewrite step of
   * ExactSubstr span removal ([[graft.operators.Dedup.verbatimRewrite]]).
   *
-  * Semantically identical to the higher-order composition kept as
-  * [[graft.operators.Dedup.removeIntervalsViaHof]]
+  * Semantically identical to the higher-order composition
   * (`filter(toks, (t,i) -> !exists(ivs, iv -> i+1 between iv.s and
-  * iv.e))`) and pinned against it in R15KernelsSpec, but that chain
+  * iv.e))`, the test-side twin `removeIntervalsViaHof`) and pinned
+  * against it in KernelContractSpec, but that chain
   * interprets a lambda per token × a nested lambda per interval —
   * O(n·m) interpreted dispatch per doc, the residual hot path of
   * pipeline_chunked_pretrain (r14 verdict item 4). This kernel sorts
@@ -73,15 +73,13 @@ case class RemoveIntervalsExpr(left: Expression, right: Expression)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val toks = left.genCode(ctx)
     val ivs = right.genCode(ctx)
-    val kernel = RemoveIntervals.getClass.getName.stripSuffix("$")
-    ev.copy(code = code"""
-      ${toks.code}
-      boolean ${ev.isNull} = ${toks.isNull};
-      ${CodeGenerator.javaType(dataType)} ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
-      if (!${ev.isNull}) {
-        ${ivs.code}
-        ${ev.value} = $kernel.compute(${toks.value}, ${ivs.isNull} ? null : ${ivs.value});
-      }""")
+    val call = computeCall(RemoveIntervals, toks.value, s"${ivs.isNull} ? null : ${ivs.value}")
+    // only a null token array makes the result null; the interval side
+    // is evaluated only under a non-null token array, and a null
+    // interval list goes to the kernel
+    ev.copy(code = code"${toks.code} boolean ${ev.isNull} = ${toks.isNull}; " +
+      code"${CodeGenerator.javaType(dataType)} ${ev.value} = null; " +
+      code"if (!${ev.isNull}) { ${ivs.code} ${ev.value} = $call; }")
   }
 
   override protected def withNewChildrenInternal(

@@ -8,50 +8,18 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Distinct 3-gram word shingles of a text column in one native pass.
+/** Distinct w-gram word shingles of a text column in one native pass.
   *
   * Semantically identical to the built-in composition
   * `array_distinct(transform(sequence(...), i -> concat_ws(' ',
-  * slice(tokens(text), i, 3))))` (kept as
-  * [[Text.shinglesViaHof]] and cross-checked in tests), but the
-  * higher-order-function chain interprets four lambdas per shingle;
-  * this expression tokenizes once and builds the deduped shingle set
-  * in a tight loop — it is the hot scalar path of every text-dedup
-  * operator. Codegen delegates to the static kernel so the stage
-  * stays in whole-stage codegen.
-  */
-case class Shingles3(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "shingles3"
-
-  override def nullSafeEval(input: Any): Any =
-    Shingles3.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${Shingles3.getClass.getName.stripSuffix("$")}.compute($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object Shingles3 {
-
-  def compute(text: UTF8String): ArrayData = ShinglesW.compute(text, 3)
-
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(Shingles3(ColumnBridge.expression(c)))
-  }
-}
-
-/** [[Shingles3]] generalized to any window width — the w-gram variant
-  * the decontamination/source-overlap family uses (w = 4). Same
-  * single-pass distinct-shingle kernel; replaces the interpreted
-  * `array_distinct(transform(sequence(...), concat_ws(slice(...))))`
-  * HOF chain of the previous `shingleArray` (r14, guide §4 — that
-  * chain was the dominant cost of every shingleSet caller). */
+  * slice(tokens(text), i, w))))` (its test-side twin, cross-checked in
+  * the kernel contract spec), but the higher-order-function chain
+  * interprets four lambdas per shingle; this expression tokenizes once
+  * and builds the deduped shingle set in a tight loop. At w = 3
+  * ([[Text.shingles3]]) it is the hot scalar path of every text-dedup
+  * operator; the decontamination/source-overlap family uses w = 4
+  * (r14, guide §4 — the HOF chain of the previous `shingleArray` was
+  * the dominant cost of every shingleSet caller). */
 case class ShinglesW(child: Expression, w: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -61,8 +29,7 @@ case class ShinglesW(child: Expression, w: Int) extends UnaryExpression {
     ShinglesW.compute(input.asInstanceOf[UTF8String], w)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${ShinglesW.getClass.getName.stripSuffix("$")}.compute($c, $w)")
+    defineCodeGen(ctx, ev, c => computeCall(ShinglesW, c, w))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -35,8 +35,7 @@ case class SimHash64(child: Expression) extends UnaryExpression {
     SimHash64.compute(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"${SimHash64.getClass.getName.stripSuffix("$")}.compute($c)")
+    defineCodeGen(ctx, ev, c => computeCall(SimHash64, c))
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

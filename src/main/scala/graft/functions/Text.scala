@@ -2,7 +2,6 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Shared text primitives for the dedup / text-analysis operators.
   * Every helper is a pure Column expression (codegen'd or
@@ -38,17 +37,8 @@ object Text {
   }
 
   /** Distinct 3-gram word shingles of a text column (empty for docs
-    * under 3 tokens) — the native one-pass expression. */
-  def shingles3(text: Column): Column = Shingles3(text)
-
-  /** Built-in-composition equivalent of [[shingles3]], kept as the
-    * no-custom-code fallback and cross-check. */
-  def shinglesViaHof(toks: Column): Column =
-    array_distinct(
-      when(size(toks) >= 3,
-        transform(sequence(lit(1), size(toks) - 2),
-          i => concat_ws(" ", slice(toks, i, lit(3)))))
-        .otherwise(array().cast(ArrayType(StringType))))
+    * under 3 tokens) — the native one-pass [[ShinglesW]] kernel. */
+  def shingles3(text: Column): Column = ShinglesW(text, 3)
 
   /** Seeded MinHash component: min over shingles of md5("<seed>|" + s).
     * Using the md5 *string* min (lexicographic) keeps the signature

@@ -1,12 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{aggregate, lit, sqrt, zip_with}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
 /** Native cosine similarity over two numeric-array columns (float or
@@ -14,13 +12,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * double-array reconstruction against a float-array query).
   *
   * A Scala UDF would deserialize each array to a Scala Seq per row;
-  * the higher-order-function composition (see [[cosineViaHof]]) is
+  * the higher-order-function composition (the test-side twin) is
   * interpreted per element. This expression runs one tight primitive
-  * loop over the unsafe array data and participates in whole-stage
-  * codegen, which is what you want when scoring billions of pairs.
-  * Accumulation is in double regardless of input float width; the
-  * element accessor is resolved per side from the child's type at
-  * plan time, so the generated loop stays branch-free.
+  * loop over the array data ([[CosineSimilarity.compute]]) and
+  * participates in whole-stage codegen, which is what you want when
+  * scoring billions of pairs. Accumulation is in double regardless of
+  * input float width; each side's element type is fixed at plan time
+  * and passed to the loop as an argument.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -34,52 +32,36 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     VectorFunctions.checkFloatArrays(prettyName, left, right)
 
-  private def isDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"cosine_similarity expects array<float|double>, got $t")
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.compute(l.asInstanceOf[ArrayData], isDouble(left),
+      r.asInstanceOf[ArrayData], isDouble(right))
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val (da, db) = (isDouble(left), isDouble(right))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) =>
+      computeCall(CosineSimilarity, a, isDouble(left), b, isDouble(right)))
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+
+  /** THE cosine loop — [[NearestCells]], [[NearestCellsTwoLevel]] and
+    * the two-level model build score through it too: one double loop
+    * in array order accumulating dot/na/nb over the common prefix,
+    * `0.0` on a zero denominator. */
+  def compute(a: ArrayData, aDouble: Boolean, b: ArrayData, bDouble: Boolean): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
-      val x = if (da) a.getDouble(i) else a.getFloat(i).toDouble
-      val y = if (db) b.getDouble(i) else b.getFloat(i).toDouble
+      val x = elem(a, aDouble, i)
+      val y = elem(b, bDouble, i)
       dot += x * y; na += x * x; nb += y * y; i += 1
     }
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb"); val x = ctx.freshName("x")
-      val y = ctx.freshName("y"); val denom = ctx.freshName("denom")
-      def get(arr: String, dbl: Boolean): String =
-        if (dbl) s"$arr.getDouble($i)" else s"(double) $arr.getFloat($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = ${get(a, isDouble(left))};
-         |  double $y = ${get(b, isDouble(right))};
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Native squared Euclidean distance — the k-means assignment kernel.
@@ -100,48 +82,30 @@ case class SquaredDistance(left: Expression, right: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     VectorFunctions.checkFloatArrays(prettyName, left, right)
 
-  private def isDouble(e: Expression): Boolean = e.dataType match {
-    case ArrayType(DoubleType, _) => true
-    case ArrayType(FloatType, _) => false
-    case t => throw new IllegalArgumentException(
-      s"squared_distance expects array<float|double>, got $t")
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val (da, db) = (isDouble(left), isDouble(right))
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0; var i = 0
-    while (i < n) {
-      val x = if (da) a.getDouble(i) else a.getFloat(i).toDouble
-      val y = if (db) b.getDouble(i) else b.getFloat(i).toDouble
-      val d = x - y
-      acc += d * d; i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    SquaredDistance.compute(l.asInstanceOf[ArrayData], isDouble(left),
+      r.asInstanceOf[ArrayData], isDouble(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc"); val d = ctx.freshName("d")
-      def get(arr: String, dbl: Boolean): String =
-        if (dbl) s"$arr.getDouble($i)" else s"(double) $arr.getFloat($i)"
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = ${get(a, isDouble(left))} - ${get(b, isDouble(right))};
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) =>
+      computeCall(SquaredDistance, a, isDouble(left), b, isDouble(right)))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+object SquaredDistance {
+
+  def compute(a: ArrayData, aDouble: Boolean, b: ArrayData, bDouble: Boolean): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0; var i = 0
+    while (i < n) {
+      val d = elem(a, aDouble, i) - elem(b, bDouble, i)
+      acc += d * d; i += 1
+    }
+    acc
+  }
 }
 
 object VectorFunctions {
@@ -163,6 +127,15 @@ object VectorFunctions {
       s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
   }
 
+  /** The analysis-time check of the one-vector kernels
+    * ([[NearestCells]], [[PqRecon]] and their twins). */
+  private[functions] def checkFloatVector(fn: String, child: Expression): TypeCheckResult =
+    child.dataType match {
+      case ArrayType(DoubleType | FloatType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(
+        s"$fn expects an array<float|double> vector, got ${t.catalogString}")
+    }
+
   /** Column form of the native expression. */
   def cosine(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarity(
@@ -172,19 +145,4 @@ object VectorFunctions {
   def sqDist(a: Column, b: Column): Column =
     ColumnBridge.column(SquaredDistance(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Built-in-composition twin of [[sqDist]] — the no-custom-code
-    * fallback and the cross-check in tests. */
-  def sqDistViaHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0.0), (acc, d) => acc + d)
-
-  /** Built-in-composition equivalent (zip_with + aggregate) — kept as
-    * the no-custom-code fallback and as a cross-check in tests. */
-  def cosineViaHof(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-    val na  = aggregate(a, lit(0.0), (acc, v) => acc + v * v)
-    val nb  = aggregate(b, lit(0.0), (acc, v) => acc + v * v)
-    dot / (sqrt(na) * sqrt(nb))
-  }
 }

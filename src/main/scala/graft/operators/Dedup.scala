@@ -33,7 +33,7 @@ object Dedup {
   private val SimhashMaxHamming = 12
 
   /** |A ∩ B| of two DISTINCT-element string arrays (every shingle
-    * array here comes from [[graft.functions.Shingles3]], which
+    * array here comes from [[graft.functions.ShinglesW]], which
     * dedups) — the [[graft.functions.MultisetOverlap]] kernel, whose
     * min-count sum equals intersection cardinality on sets. Replaces
     * `size(array_intersect(a, b))` in the verify joins (r14):
@@ -240,29 +240,18 @@ object Dedup {
     val prefix = sh.join(dfreq, "sh")
       .withColumn("rnk", row_number().over(wDoc))
       .where(col("rnk") <= col("ns") - ceil(lit(t) * col("ns")) + 1)
-      .select("doc_id", "ns", "sh", "rnk")
+      .select("doc_id", "ns", "sh")
     // r15 (guide §3.2 posture — prune the join's output before it is
-    // deduped and verified): LENGTH and POSITIONAL prefix filters,
-    // both lossless for the threshold.
-    //   J(A,B) ≥ t ⇒ |A∩B| ≥ t·|A∪B| ≥ t·max(|A|,|B|), and |A∩B| is
-    //   an integer, so |A∩B| ≥ ⌈t·max⌉ =: minOverlap.
-    //   Length: |A∩B| ≤ min(|A|,|B|) ⇒ min(ns) ≥ minOverlap.
-    //   Positional: for the FIRST common shingle in the global
-    //   (df, sh) order, at ranks (i, j), every other common shingle
-    //   ranks after it on BOTH sides ⇒ |A∩B| ≤ 1 + min(ns_a−i, ns_b−j)
-    //   ≥ minOverlap must hold. A qualifying pair always survives via
-    //   its first-common-shingle join row (which both prefixes contain
-    //   by the prefix theorem); rows failing the test are pruned
-    //   before the distinct. Same ceil(lit(t)·…) idiom as the prefix
-    //   bound above; the oracle is the brute-force definition and
-    //   gates the result at two SFs.
+    // deduped and verified): a LENGTH filter, lossless for the
+    // threshold. J(A,B) ≥ t ⇒ |A∩B| ≥ t·|A∪B| ≥ t·max(|A|,|B|), and
+    // |A∩B| ≤ min(|A|,|B|), so min(ns) ≥ ⌈t·max(ns)⌉. Same
+    // ceil(lit(t)·…) idiom as the prefix bound above; the oracle is
+    // the brute-force definition and gates the result at two SFs.
     val minOverlap = ceil(lit(t) * greatest(col("a.ns"), col("b.ns")))
     val cands = prefix.as("a")
       .join(prefix.as("b"),
         col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-        least(col("a.ns"), col("b.ns")) >= minOverlap &&
-        lit(1) + least(col("a.ns") - col("a.rnk"),
-                       col("b.ns") - col("b.rnk")) >= minOverlap)
+        least(col("a.ns"), col("b.ns")) >= minOverlap)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
     // exact verify on full shingle sets. No broadcast hint on the
@@ -954,8 +943,8 @@ object Dedup {
       // r15: interval removal as the RemoveIntervals kernel (guide §4)
       // — the filter×exists HOF chain it replaces interpreted a lambda
       // per token × a nested one per interval, the residual hot path
-      // of pipeline_chunked_pretrain; the HOF twin stays below and
-      // R15KernelsSpec pins them equal
+      // of pipeline_chunked_pretrain; KernelContractSpec pins it to
+      // the HOF twin
       .withColumn("kept", graft.functions.RemoveIntervals
         .removeIntervals(col("toks"), col("ivs")))
       .select(col("doc_id"),
@@ -963,12 +952,4 @@ object Dedup {
         concat_ws(" ", col("kept")).as("clean_text"))
   }
 
-  /** Builtin/HOF twin of [[graft.functions.RemoveIntervals]] — the
-    * no-custom-code spelling [[verbatimRewrite]] used through r14,
-    * kept as the spec-pinned cross-check (the oracle replays the same
-    * positional rule independently). */
-  private[graft] def removeIntervalsViaHof(toks: org.apache.spark.sql.Column,
-      ivs: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    filter(toks, (t, i) => !exists(ivs,
-      iv => (i + 1) >= iv("s") && (i + 1) <= iv("e")))
 }

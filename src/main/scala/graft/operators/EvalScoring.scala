@@ -32,42 +32,6 @@ object EvalScoring {
   private def norm(c: Column): Column =
     lower(regexp_replace(trim(c), "\\s+", " "))
 
-  /** Higher-order-function twin of
-    * [[graft.functions.MultisetOverlap]] — Σ_t min(count_p(t),
-    * count_r(t)) in O(L log L) element ops per row: tag each token
-    * with its source, `array_sort` the combined struct array (orders
-    * by token, sources adjacent within a run), then ONE `aggregate`
-    * pass walks the sorted runs keeping per-run (count_p, count_r)
-    * and flushing min(cp, cr) at each run boundary. Kept as the
-    * no-custom-code cross-check (MultisetOverlapSpec pins parity on
-    * arbitrary arrays); the hot path uses the custom expression —
-    * the interpreted lambdas here were ~75 % of the
-    * eval_preference_pairs bench row (r14 measurement).
-    *
-    * The fold state starts with cp+cr = 0 — true ONLY before the
-    * first element (every step increments one counter), so the
-    * "fresh run" test never needs a sentinel token and the empty
-    * string is an ordinary token. */
-  private[graft] def multisetOverlapViaHof(p: Column, r: Column): Column = {
-    val tagged = array_sort(concat(
-      transform(p, t => struct(t.as("tok"), lit(1).as("src"))),
-      transform(r, t => struct(t.as("tok"), lit(2).as("src")))))
-    val init = struct(lit("").as("prev"), lit(0).as("cp"),
-      lit(0).as("cr"), lit(0).as("acc"))
-    val folded = aggregate(tagged, init, (s, e) => {
-      val fresh = (s("cp") + s("cr") === 0) || (e("tok") =!= s("prev"))
-      val dp = when(e("src") === 1, lit(1)).otherwise(lit(0))
-      val dr = when(e("src") === 2, lit(1)).otherwise(lit(0))
-      struct(
-        e("tok").as("prev"),
-        when(fresh, dp).otherwise(s("cp") + dp).as("cp"),
-        when(fresh, dr).otherwise(s("cr") + dr).as("cr"),
-        when(fresh, s("acc") + least(s("cp"), s("cr")))
-          .otherwise(s("acc")).as("acc"))
-    })
-    folded("acc") + least(folded("cp"), folded("cr"))
-  }
-
   /** Append the scoring columns (np/nr/ov and rounded `token_f1`) to
     * any frame carrying `pred`/`ref` — the reusable per-row reward
     * kernel ([[scorePairs]] and the preference-pair builder share

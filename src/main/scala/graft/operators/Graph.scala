@@ -45,19 +45,6 @@ object Graph {
   private[graft] def pagerank(edgesIn: DataFrame, iters: Int): DataFrame =
     pagerankCore(edgesIn, iters, tol = None)._1
 
-  /** The accepted-risk escape hatch for the per-iteration rounding
-    * contract: with `roundPerEdge` ON, each edge's contribution
-    * rank/deg is HALF-UP-rounded to [[Scale]] decimals BEFORE the
-    * in-sum and summed as DECIMAL (exact, order-independent — the
-    * bm25Batch determinism precedent), so no engine- or
-    * partitioning-dependent FP summation order can flip a 6dp
-    * boundary at any scale. Costs one decimal agg per round; the
-    * default path keeps the cheaper double sum whose boundary-flip
-    * risk is documented as accepted. */
-  private[graft] def pagerankPerEdgeRounded(
-      edgesIn: DataFrame, iters: Int): DataFrame =
-    pagerankCore(edgesIn, iters, tol = None, roundPerEdge = true)._1
-
   /** PageRank run to a FIXED POINT: iterate until the largest
     * per-node rank change falls below `tol` (or `maxIters` rounds, a
     * hard safety stop — a real centrality signal needs ≥10 rounds or
@@ -72,7 +59,7 @@ object Graph {
 
   private def pagerankCore(
       edgesIn: DataFrame, iters: Int,
-      tol: Option[Double], roundPerEdge: Boolean = false): (DataFrame, Int) = {
+      tol: Option[Double]): (DataFrame, Int) = {
     val edges = edgesIn.localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
       .localCheckpoint()
@@ -84,16 +71,11 @@ object Graph {
     var converged = false
     while (round < iters && !converged) {
       round += 1
-      val perEdge =
-        if (roundPerEdge)
-          graft.functions.Text.roundPortable(col("rank") / col("deg"), Scale)
-            .cast("decimal(28,6)")
-        else col("rank") / col("deg")
       val contribs = edges
         .join(deg, "src")
         .join(ranks.withColumnRenamed("vec_id", "src"), "src")
-        .select(col("dst").as("vec_id"), perEdge.as("c"))
-        .groupBy("vec_id").agg(sum("c").cast("double").as("in_sum"))
+        .select(col("dst").as("vec_id"), (col("rank") / col("deg")).as("c"))
+        .groupBy("vec_id").agg(sum("c").as("in_sum"))
       val next = nodes.join(contribs, Seq("vec_id"), "left")
         .select(col("vec_id"),
           graft.functions.Text.roundPortable(

@@ -106,21 +106,9 @@ object TextAnalysis {
   private[graft] def qualityScoreCol: Column =
     // r14: the [[graft.functions.QualityScore]] kernel (one pass per
     // doc) replaces tokens + array_distinct + an interpreted
-    // filter(isin) lambda; same digits (R14KernelsSpec pins kernel ==
-    // the HOF twin below), same oracle SQL.
+    // filter(isin) lambda; same digits (KernelContractSpec pins kernel
+    // == its HOF twin), same oracle SQL.
     Text.roundPortable(graft.functions.QualityScore(col("text")), 4)
-
-  /** Builtin-composition twin of [[graft.functions.QualityScore]] —
-    * the no-custom-code cross-check (R14KernelsSpec). */
-  private[graft] def qualityScoreColViaHof: Column = {
-    val nTok = size(toks)
-    val stopRatio =
-      size(filter(toks, t => t.isin(Stopwords: _*))).cast("double") / nTok
-    val diversity = size(array_distinct(toks)).cast("double") / nTok
-    val lengthScore = least(nTok.cast("double") / 100.0, lit(1.0))
-    Text.roundPortable(lit(0.4) * lengthScore + lit(0.3) * diversity +
-      lit(0.3) * stopRatio, 4)
-  }
 
   def qTextQuality(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
@@ -186,8 +174,8 @@ object TextAnalysis {
     */
   def qTextGopherRules(spark: SparkSession, dir: String): DataFrame = {
     // r15: the five signals come from the one-pass GopherSignals
-    // kernel (guide §4) — the HOF spelling it replaces (kept below as
-    // [[gopherSignalsViaHof]], R15KernelsSpec-pinned) paid
+    // kernel (guide §4) — the HOF spelling it replaces (the test-side
+    // twin KernelContractSpec pins it against) paid
     // O(distinct·len) interpreted lambda dispatch per doc for the
     // top-token count. Flag arithmetic below is byte-identical to the
     // r14 expressions, only the counters' provenance changed.
@@ -208,22 +196,6 @@ object TextAnalysis {
         col("r_word_count") && col("r_mean_word_len") && col("r_alpha") &&
         col("r_stopwords") && col("r_repetition"))
       .orderBy("doc_id")
-  }
-
-  /** Builtin/HOF twin of [[graft.functions.GopherSignals]] — the
-    * counter spellings [[qTextGopherRules]] used through r14, bundled
-    * into the same struct layout so R15KernelsSpec can pin the kernel
-    * field-for-field. */
-  private[graft] def gopherSignalsViaHof(text: Column): Column = {
-    val tk = Text.tokens(text)
-    struct(
-      size(tk).as("n"),
-      aggregate(transform(tk, t => length(t)), lit(0),
-        (acc, x) => acc + x).as("len_sum"),
-      size(filter(tk, t => t.rlike("[A-Za-z]"))).as("n_alpha"),
-      size(filter(tk, t => t.isin(Stopwords: _*))).as("stop_cnt"),
-      array_max(transform(array_distinct(tk),
-        d => size(filter(tk, x => x === d)))).as("top_cnt"))
   }
 
   /** Language-ID heuristic (CJK codepoint share, then stopword votes
@@ -352,21 +324,9 @@ object TextAnalysis {
     // measured 2.4 s/pass at sf0.1, the whole gate stage of
     // pipeline_pretrain_model. Same digits: the oracle still spells
     // conv(substring(md5(t),1,6),16,10) % 2001 etc., and
-    // R14KernelsSpec pins kernel == builtin fold.
+    // R14KernelsSpec pins kernel == the builtin fold (a test-side twin).
     val meanW = graft.functions.ClassifierMeanWKernel
       .classifierMeanW(toks, None)
-    lit(1.0) / (lit(1.0) + exp(lit(-4.0) * meanW))
-  }
-
-  /** The builtin-composition twin of the kernel above — kept as the
-    * no-custom-code cross-check (R14KernelsSpec). */
-  private[graft] def classifierProbViaHof: Column = {
-    // md5 hex → BIGINT via conv(,16,10); DuckDB: CAST('0x'||hex AS BIGINT)
-    val tokenWeight = (t: Column) =>
-      (conv(substring(md5(t), 1, 6), 16, 10).cast("long") % 2001L - 1000L)
-        .cast("double") / 1000.0
-    val meanW = aggregate(transform(toks, tokenWeight), lit(0.0),
-      (acc, w) => acc + w) / size(toks)
     lit(1.0) / (lit(1.0) + exp(lit(-4.0) * meanW))
   }
 
@@ -507,7 +467,7 @@ object TextAnalysis {
 
   /** (doc_id, sh) — each doc exploded to its distinct word w-grams.
     * r14: the [[graft.functions.ShinglesW]] kernel (one codegen'd
-    * pass per doc, the Shingles3 pattern at any width) replaces the
+    * pass per doc at any width) replaces the
     * two-projection HOF chain — the interpreted transform was the
     * dominant cost of every caller (decontamination ×4 plans,
     * source overlap). The HOF twin stays below as the cross-check. */

@@ -3,37 +3,39 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
-import graft.functions.{CosineSimilarity, SimHash64, SquaredDistance}
+import org.apache.spark.sql.types.{DataType, DoubleType}
+import graft.functions.{computeCall, elem, isDouble, CosineSimilarity, SimHash64, SquaredDistance}
 
 /** Cosine of a vector with itself: 1.0 unless the vector is all-zero
   * (then 0.0, matching [[CosineSimilarity]]'s zero-denominator
-  * convention). One early-exit pass, no multiplies. Reads the element
-  * type from the child (CosineSimilarity accepts float or double
-  * arrays, so the rewrite must too — a getFloat on a double array
-  * would scan the wrong bytes). */
-case class SelfCosine(child: Expression)
-    extends UnaryExpression with CodegenFallback {
+  * convention; a null element reads as 0.0 there too). One early-exit
+  * pass, no multiplies. Reads the element type from the child
+  * (CosineSimilarity accepts float or double arrays, so the rewrite
+  * must too — a getFloat on a double array would scan the wrong
+  * bytes). */
+case class SelfCosine(child: Expression) extends UnaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "self_cosine"
-  private lazy val isDouble: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == DoubleType
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    SelfCosine.compute(input.asInstanceOf[ArrayData], isDouble(child))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => computeCall(SelfCosine, c, isDouble(child)))
+  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
+}
+
+object SelfCosine {
+  def compute(a: ArrayData, isDouble: Boolean): Double = {
     var i = 0
     while (i < a.numElements()) {
-      val nonZero =
-        if (isDouble) a.getDouble(i) != 0.0 else a.getFloat(i) != 0.0f
-      if (nonZero) return 1.0
+      if (elem(a, isDouble, i) != 0.0) return 1.0
       i += 1
     }
     0.0
   }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
 /** Algebraic simplification: `cosine_similarity(x, x)` needs no dot
@@ -87,7 +89,7 @@ object GraftExtensions {
       "squared_distance" -> ((args: Seq[Expression]) =>
         SquaredDistance(args(0), args(1))),
       "shingles3" -> ((args: Seq[Expression]) =>
-        graft.functions.Shingles3(args.head)),
+        graft.functions.ShinglesW(args.head, 3)),
       // same pattern constant as the Column twin
       // (TextAnalysis.bpeTokenCount) — one tokenizer definition
       "bpe_token_count" -> ((args: Seq[Expression]) =>

@@ -56,7 +56,7 @@ class ExpressionSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val diffs = df.select(
       abs(VectorFunctions.cosine($"a", $"b") -
-          VectorFunctions.cosineViaHof(
+          KernelContractSpec.cosineViaHof(
             $"a".cast("array<double>"), $"b".cast("array<double>"))).as("d"))
       .as[Double].collect()
     assert(diffs.forall(_ < 1e-12))
@@ -73,7 +73,7 @@ class ExpressionSpec extends SparkSpec {
     val df = rows.toDF("a", "b")
     val pairs = df.select(
       VectorFunctions.sqDist($"a", $"b").as("native"),
-      VectorFunctions.sqDistViaHof($"a", $"b").as("hof"))
+      KernelContractSpec.sqDistViaHof($"a", $"b").as("hof"))
       .as[(Double, Double)].collect()
     pairs.foreach { case (n, h) => assert(n == h, s"$n != $h") }
   }
@@ -188,13 +188,13 @@ class ExpressionSpec extends SparkSpec {
     val docs = graft.Tables.documents(spark, sf)
     val both = docs.select(
       Text.shingles3($"text").as("native"),
-      Text.shinglesViaHof(Text.tokens($"text")).as("hof"))
+      KernelContractSpec.shinglesViaHof(Text.tokens($"text")).as("hof"))
     val diff = both.where(not($"native" === $"hof")).count()
     assert(diff == 0L)
     // edge inputs: empty, whitespace-only, exactly 3 tokens, dup shingles
     val edge = Seq("", "   ", "x y z", "a b a b a b a b").toDF("text")
       .select(Text.shingles3($"text").as("native"),
-              Text.shinglesViaHof(Text.tokens($"text")).as("hof"))
+              KernelContractSpec.shinglesViaHof(Text.tokens($"text")).as("hof"))
       .collect()
     edge.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString))
   }
@@ -209,7 +209,7 @@ class ExpressionSpec extends SparkSpec {
     val rows = variants.toDF("text").select(
       Text.tokens($"text").as("toks"),
       Text.shingles3($"text").as("native"),
-      Text.shinglesViaHof(Text.tokens($"text")).as("hof"))
+      KernelContractSpec.shinglesViaHof(Text.tokens($"text")).as("hof"))
       .collect()
     val expectToks = Seq("alpha", "beta", "gamma", "delta")
     rows.foreach { r =>
@@ -228,7 +228,7 @@ class ExpressionSpec extends SparkSpec {
     }
     val prop = docs.toDF("text").select(
       Text.shingles3($"text").as("native"),
-      Text.shinglesViaHof(Text.tokens($"text")).as("hof")).collect()
+      KernelContractSpec.shinglesViaHof(Text.tokens($"text")).as("hof")).collect()
     prop.foreach(r => assert(r.getSeq[String](0) == r.getSeq[String](1), r.toString))
   }
 }

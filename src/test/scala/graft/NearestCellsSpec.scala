@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions.col
   * its algebra pinned against a plain-Scala reference (tie rules
   * included), its limit behavior pinned against the flat expression
   * (probing EVERY super must reproduce the flat argmax bit for bit —
-  * a theorem, not data luck), and codegen/interpreted parity. The
+  * a theorem, not data luck); codegen/interpreted parity is a row of
+  * [[KernelContractSpec]]. The
   * two-level path is an approximation by construction (a row whose
   * true nearest cell hides in an unprobed super gets its second-best)
   * and with the untrained first-k quantizer it deviates materially on
@@ -133,28 +134,5 @@ class NearestCellsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val recall = got.count(truth).toDouble / truth.size
     assert(recall >= 0.8, f"two-level search recall@5 $recall%.2f fell below 0.80")
-  }
-
-  test("two-level works identically under interpreted (non-codegen) eval") {
-    val rnd = new scala.util.Random(31)
-    def fvec() = Array.fill(8)(rnd.nextFloat() - 0.5f)
-    val cents: Seq[(Long, Array[Double])] =
-      Seq.tabulate(20)(j => (j.toLong, fvec().map(_.toDouble)))
-    val rows = Seq.fill(30)(fvec())
-    val df = rows.toDF("v")
-      .select(NearestCells.nearestCellsTwoLevel($"v", cents, 2, 2).as("b"))
-    val viaCodegen = df.as[Seq[Long]].collect().toSeq
-    val factory = spark.conf.getOption("spark.sql.codegen.factoryMode")
-    val whole = spark.conf.getOption("spark.sql.codegen.wholeStage")
-    try {
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      assert(df.as[Seq[Long]].collect().toSeq == viaCodegen)
-    } finally {
-      factory.fold(spark.conf.unset("spark.sql.codegen.factoryMode"))(
-        spark.conf.set("spark.sql.codegen.factoryMode", _))
-      whole.fold(spark.conf.unset("spark.sql.codegen.wholeStage"))(
-        spark.conf.set("spark.sql.codegen.wholeStage", _))
-    }
   }
 }

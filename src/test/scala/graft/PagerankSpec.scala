@@ -66,21 +66,6 @@ class PagerankSpec extends SparkSpec {
     assert(out == fixed)
   }
 
-  test("roundPerEdge dial reproduces the closed-form answers exactly") {
-    // the escape hatch must not CHANGE the semantics where no FP
-    // boundary is in play — same hand-computed fixed points as the
-    // default path, plus the fixture gate's rows bit-for-bit (every
-    // per-edge contribution here is exactly representable at 6dp)
-    def runR(edges: Seq[(Long, Long)], iters: Int) =
-      Graph.pagerankPerEdgeRounded(edges.toDF("src", "dst"), iters)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
-    assert(runR(Seq((1L, 2L), (2L, 3L), (3L, 1L)), 2) ==
-      Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0))
-    val r2 = runR(Seq((1L, 9L), (2L, 9L), (3L, 9L)), 2)
-    assert(r2(9L) == 0.5325 && r2(2L) == 0.15)
-    assert(runR(Seq((1L, 2L), (1L, 3L)), 1).apply(2L) == 0.575)
-  }
-
   test("maxIters is a hard stop when tol is never reached") {
     // 2-cycle with an injector: ranks oscillate toward the fixed point
     // slowly; an absurd tol forces the hard stop to bind.

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.{MinHashes, MultisetOverlap, Text}
-import graft.operators.EvalScoring
 
 /** Round-14 optimization kernels: the custom expressions that
   * replaced interpreted plans must be BIT-IDENTICAL to the builtin
-  * compositions they displaced (which stay in-tree as the
-  * cross-check twins).
+  * compositions they displaced (the test-side twins in
+  * [[KernelContractSpec]]).
   */
 class R14KernelsSpec extends SparkSpec {
   import spark.implicits._
@@ -29,7 +28,7 @@ class R14KernelsSpec extends SparkSpec {
       (Seq(""), Seq("", "")))
     val df = cases.toDF("p", "r")
       .withColumn("fast", MultisetOverlap.multisetOverlap($"p", $"r"))
-      .withColumn("slow", EvalScoring.multisetOverlapViaHof($"p", $"r"))
+      .withColumn("slow", KernelContractSpec.multisetOverlapViaHof($"p", $"r"))
     val bad = df.where($"fast" =!= $"slow").count()
     assert(bad == 0, "expression diverged from the HOF fold")
   }
@@ -70,7 +69,7 @@ class R14KernelsSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val both = docs.select(
       graft.operators.TextAnalysis.classifierProb.as("fast"),
-      graft.operators.TextAnalysis.classifierProbViaHof.as("slow"))
+      KernelContractSpec.classifierProbViaHof($"text").as("slow"))
     // bit-identical (not approximately): both sum the same doubles in
     // the same order; NaN rows (empty docs) must be NaN on both sides
     val bad = both.where(
@@ -152,7 +151,7 @@ class R14KernelsSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val both = docs.select(
       graft.operators.TextAnalysis.qualityScoreCol.as("fast"),
-      graft.operators.TextAnalysis.qualityScoreColViaHof.as("slow"))
+      Text.roundPortable(KernelContractSpec.qualityScoreViaHof($"text"), 4).as("slow"))
     assert(both.where($"fast" =!= $"slow").count() == 0)
     assert(both.count() > 0)
   }

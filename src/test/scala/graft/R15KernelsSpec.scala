@@ -1,23 +1,25 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{GopherSignals, MinHashes, RemoveIntervals, Text}
+import graft.functions.{MinHashes, RemoveIntervals, Text}
 import graft.operators.{Dedup, Similarity, TextAnalysis}
 
 /** Round-15 optimization kernels and pruning rules: every custom
   * expression must be BIT-IDENTICAL to the builtin/HOF composition it
-  * displaced (kept in-tree as the twin), and every candidate-pruning
+  * displaced (the twins and the kernel contract table live in
+  * [[KernelContractSpec]]; the RemoveIntervals twin checks and the
+  * end-to-end rows stay here), and every candidate-pruning
   * predicate must be LOSSLESS against the brute-force definition the
   * oracle replays.
   */
 class R15KernelsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val rng = new scala.util.Random(15)
-
   // ---------------------------------------------------------------
   // RemoveIntervals
   // ---------------------------------------------------------------
+
+  private val rng = new scala.util.Random(15)
 
   test("RemoveIntervals kernel == the filter×exists HOF twin") {
     // random token arrays with random (possibly overlapping, adjacent,
@@ -42,7 +44,7 @@ class R15KernelsSpec extends SparkSpec {
       .withColumn("ivs", transform($"raw",
         iv => struct(iv("_1").as("s"), iv("_2").as("e"))))
       .withColumn("fast", RemoveIntervals.removeIntervals($"toks", $"ivs"))
-      .withColumn("slow", Dedup.removeIntervalsViaHof($"toks", $"ivs"))
+      .withColumn("slow", KernelContractSpec.removeIntervalsViaHof($"toks", $"ivs"))
     // element-wise identity including order and multiplicity
     assert(df.where(not($"fast" <=> $"slow")).count() == 0,
       "RemoveIntervals diverged from the HOF twin")
@@ -75,7 +77,7 @@ class R15KernelsSpec extends SparkSpec {
         spark.conf.set(keys(1), wholeStage)
         val out = df.select(
           RemoveIntervals.removeIntervals($"toks", $"ivs").as("fast"),
-          Dedup.removeIntervalsViaHof($"toks", $"ivs").as("slow")).collect()
+          KernelContractSpec.removeIntervalsViaHof($"toks", $"ivs").as("slow")).collect()
         val diverged = out.filterNot(r => r.get(0) == r.get(1))
         assert(diverged.isEmpty, s"$mode: kernel vs twin: ${diverged.mkString(", ")}")
     } finally keys.zip(saved).foreach {
@@ -110,7 +112,7 @@ class R15KernelsSpec extends SparkSpec {
       toksDf.join(ivs, Seq("doc_id"), "left")
         .withColumn("ivs",
           coalesce(col("ivs"), array().cast("array<struct<s:int,e:int>>")))
-        .withColumn("kept", Dedup.removeIntervalsViaHof(col("toks"), col("ivs")))
+        .withColumn("kept", KernelContractSpec.removeIntervalsViaHof(col("toks"), col("ivs")))
         .select(col("doc_id"),
           (col("n") - size(col("kept"))).cast("long").as("n_removed"),
           concat_ws(" ", col("kept")).as("clean_text"))
@@ -124,26 +126,6 @@ class R15KernelsSpec extends SparkSpec {
   // ---------------------------------------------------------------
   // GopherSignals
   // ---------------------------------------------------------------
-
-  test("GopherSignals kernel == the HOF twin, field for field") {
-    val texts = (Seq(
-      "", "   ", "\t\n", "a", "the the the",
-      "the a and of to", "x y z w v u t s r q",
-      "Ünïcode emoji🙂 mixé", "tab\tsep  and   runs",
-      "𝔘𝔫𝔦 𝔠𝔬𝔡𝔢 supplementary 𝕏",     // non-BMP: code points != UTF-16 units
-      "123 456 789", "a. b! c?") ++
-      (1 to 100).map(_ => Seq.fill(rng.nextInt(30))(
-        Seq("the", "a", "of", "to", "and", "x", "zz", "Ünïcode",
-          "emoji🙂", "W0rd", "!!!", "𝕏y")(rng.nextInt(12))).mkString(" ")))
-      .toDF("text")
-    val both = texts.select(
-      GopherSignals($"text").as("fast"),
-      TextAnalysis.gopherSignalsViaHof($"text").as("slow"))
-    for (f <- Seq("n", "len_sum", "n_alpha", "stop_cnt", "top_cnt")) {
-      val bad = both.where(not($"fast"(f) <=> $"slow"(f))).count()
-      assert(bad == 0, s"GopherSignals.$f diverged from the HOF twin")
-    }
-  }
 
   test("qTextGopherRules flags match the r14 HOF spelling end to end") {
     val out = TextAnalysis.qTextGopherRules(spark, sf)
@@ -207,7 +189,7 @@ class R15KernelsSpec extends SparkSpec {
     assert(got.count() == brute.count())
     assert(got.exceptAll(brute).count() == 0 &&
            brute.exceptAll(got).count() == 0,
-      "length/positional pruning lost or invented a pair")
+      "length/prefix pruning lost or invented a pair")
   }
 
   test("qDedupContainment == brute-force all-pairs definition (fixture)") {
